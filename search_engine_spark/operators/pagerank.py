@@ -358,9 +358,14 @@ def hits(
     e_by_dst = e.repartition("dst").localCheckpoint()
 
     def _l1_scaled(df: DataFrame, col: str) -> DataFrame:
+        # a round with no link mass (no edge between two nodes of the
+        # universe) has a 0 normalizer: every score is then 0, not 0/0
         total = df.agg(F.sum(col).alias("_t"))
         return df.crossJoin(F.broadcast(total)).select(
-            "id", (F.col(col) * F.lit(float(n_nodes)) / F.col("_t")).alias(col)
+            "id",
+            F.when(F.col("_t") == 0, F.lit(0.0))
+            .otherwise(F.col(col) * F.lit(float(n_nodes)) / F.col("_t"))
+            .alias(col),
         )
 
     hub = nodes.withColumn("hub", F.lit(1.0))
@@ -395,41 +400,51 @@ def hits(
 
 
 def hits_sql(
-    iters: int = 5, table: str = "documents", docid: str = "doc_id"
+    iters: int = 5, table: str = "documents", docid: str = "doc_id",
+    edges_cte: str | None = None,
+    nodes_cte: str | None = None,
 ) -> str:
     """Full DuckDB mirror of :func:`hits` over :func:`synthetic_edges_sql`'s
     edge relation — ``iters`` unrolled (auth-raw, auth-norm, hub-raw,
-    hub-norm) CTE quadruples, final 6-dp round."""
+    hub-norm) CTE quadruples, final 6-dp round. ``edges_cte`` /
+    ``nodes_cte`` inject a custom (src, dst) edge body and (id) node body
+    in place of the synthetic doc graph, as in :func:`pagerank_sql`."""
+    edges_body = edges_cte or synthetic_edges_sql(table, docid)
+    nodes_body = nodes_cte or f"SELECT {docid}::BIGINT AS id FROM {table}"
     ctes = [
-        f"n AS MATERIALIZED (SELECT count(*) AS n FROM {table})",
-        f"edges AS MATERIALIZED ({synthetic_edges_sql(table, docid)})",
-        f"h0 AS MATERIALIZED (SELECT {docid}::BIGINT AS id, 1.0::DOUBLE AS hub FROM {table})",
+        f"nodes AS MATERIALIZED ({nodes_body})",
+        "n AS MATERIALIZED (SELECT count(*) AS n FROM nodes)",
+        f"edges AS MATERIALIZED ({edges_body})",
+        "h0 AS MATERIALIZED (SELECT id, 1.0::DOUBLE AS hub FROM nodes)",
     ]
+
+    def norm(step: str, col: str) -> str:
+        # 0 normalizer (no link mass): every score 0, like hits()
+        return (
+            f"{step} AS MATERIALIZED (SELECT id, CASE WHEN s.t = 0 THEN 0.0 "
+            f"ELSE {col} * (SELECT n FROM n) / s.t END AS {col} "
+            f"FROM {step}r, (SELECT sum({col}) AS t FROM {step}r) s)"
+        )
+
     for i in range(1, iters + 1):
         ctes.append(
             f"""a{i}r AS MATERIALIZED (
-  SELECT d.{docid}::BIGINT AS id, coalesce(s._m, 0)::DOUBLE AS auth
-  FROM {table} d LEFT JOIN (
+  SELECT d.id, coalesce(s._m, 0)::DOUBLE AS auth
+  FROM nodes d LEFT JOIN (
     SELECT e.dst, sum(h.hub) AS _m
     FROM edges e JOIN h{i - 1} h ON h.id = e.src GROUP BY e.dst) s
-  ON s.dst = d.{docid}::BIGINT)"""
+  ON s.dst = d.id)"""
         )
-        ctes.append(
-            f"a{i} AS MATERIALIZED (SELECT id, auth * (SELECT n FROM n) / "
-            f"(SELECT sum(auth) FROM a{i}r) AS auth FROM a{i}r)"
-        )
+        ctes.append(norm(f"a{i}", "auth"))
         ctes.append(
             f"""h{i}r AS MATERIALIZED (
-  SELECT d.{docid}::BIGINT AS id, coalesce(s._m, 0)::DOUBLE AS hub
-  FROM {table} d LEFT JOIN (
+  SELECT d.id, coalesce(s._m, 0)::DOUBLE AS hub
+  FROM nodes d LEFT JOIN (
     SELECT e.src, sum(a.auth) AS _m
     FROM edges e JOIN a{i} a ON a.id = e.dst GROUP BY e.src) s
-  ON s.src = d.{docid}::BIGINT)"""
+  ON s.src = d.id)"""
         )
-        ctes.append(
-            f"h{i} AS MATERIALIZED (SELECT id, hub * (SELECT n FROM n) / "
-            f"(SELECT sum(hub) FROM h{i}r) AS hub FROM h{i}r)"
-        )
+        ctes.append(norm(f"h{i}", "hub"))
     return (
         "WITH " + ",\n".join(ctes)
         + f"""

@@ -29,6 +29,7 @@ import json
 import os
 from collections.abc import Iterator
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -60,7 +61,18 @@ SCORE_SLACK = 10.0 ** -SCORE_ROUND
 class Index:
     """Handles to one index warehouse (see operators/indexer.py layout).
     Tables resolve through the Warehouse abstraction: Iceberg when a
-    catalog is configured, the parquet layout otherwise."""
+    catalog is configured, the parquet layout otherwise.
+
+    A handle is a SNAPSHOT of one index commit: ``stats`` are read at
+    :func:`load_index`, and each table is resolved (file listing + schema)
+    on first use and reused by every later query on the handle — a
+    long-lived server pays the listing and schema-inference job once per
+    table, not once per query. Filters still push down into the cached
+    scan, so partition and row-group pruning are unchanged. After a
+    rebuild, call :func:`load_index` again: a versioned rebuild leaves the
+    old handle answering from its own snapshot, and a non-versioned
+    in-place rebuild deletes the files the old handle lists, so its next
+    scan fails instead of mixing two commits."""
 
     spark: SparkSession
     path: str
@@ -70,15 +82,15 @@ class Index:
     def _wh(self) -> Warehouse:
         return Warehouse(self.spark, self.path, self.iceberg_catalog)
 
-    @property
+    @cached_property
     def postings(self) -> DataFrame:
         return self._wh().read("postings")
 
-    @property
+    @cached_property
     def terms(self) -> DataFrame:
         return self._wh().read("terms")
 
-    @property
+    @cached_property
     def docs(self) -> DataFrame:
         return self._wh().read("docs")
 
@@ -562,7 +574,9 @@ def topk_over_segments(
     driver-side. Each segment's pruned postings decode with the GLOBAL
     idf/avgdl and docids shift by the segment offset; one union + one
     groupBy scores everything. Result is identical to querying the
-    collapsed index (tested to 1e-9)."""
+    collapsed index (tested to 1e-9). Every call loads fresh segment
+    handles, so each call pays each segment's table resolution (file
+    listing + schema inference) again."""
     from search_engine_spark.oracle.bm25 import bm25_idf
 
     idxs = [load_index(spark, d) for d in seg_dirs]

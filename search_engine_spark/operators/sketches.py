@@ -22,6 +22,8 @@ collisions); with width w and depth d, the over-count exceeds
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from search_engine_spark.functions.hashing import (
@@ -34,12 +36,32 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def _term_counts(df: DataFrame, docid: str, text: str) -> DataFrame:
-    return (
+def _probes(
+    df: DataFrame, text: str, depth: int, width: int
+) -> DataFrame:
+    """(term, exact, row, bucket) — each term's corpus-wide token count,
+    once per counter it hashes into: the one aggregation both the
+    counter grid and the heavy-hitter estimates derive from."""
+    h0, h1 = md5_two_hash_cols(F.col("term"), 2)[:2]
+    tf = (
         df.select(F.explode(tokens_col(text)).alias("term"))
         .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
+        .agg(F.count(F.lit(1)).alias("exact"))
+        .select("term", "exact", h0.alias("_h1"), (h1 - h0).alias("_h2"))
     )
+    return tf.select(
+        "term", "exact", "_h1", "_h2",
+        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
+    ).select(
+        "term", "exact", "row",
+        ((F.col("_h1") + F.col("row") * F.col("_h2")) % width).alias(
+            "bucket"
+        ),
+    )
+
+
+def _grid(probes: DataFrame) -> DataFrame:
+    return probes.groupBy("row", "bucket").agg(F.sum("exact").alias("c"))
 
 
 def cms_counters(
@@ -53,18 +75,7 @@ def cms_counters(
     per-term counts (one keyed agg with map-side combine), then d
     bucket-keyed partial sums; the grid is a mergeable monoid, so
     incremental ingest is a union + re-agg of grids."""
-    h0, h1 = md5_two_hash_cols(F.col("term"), 2)[:2]
-    tf = _term_counts(df, docid, text).select(
-        "term", "c", h0.alias("_h1"), (h1 - h0).alias("_h2")
-    )
-    exploded = tf.select(
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
-        ((F.col("_h1") + F.col("row") * F.col("_h2")) % width).alias(
-            "bucket"
-        ),
-        "c",
-    )
-    return exploded.groupBy("row", "bucket").agg(F.sum("c").alias("c"))
+    return _grid(_probes(df, text, depth, width))
 
 
 def cms_heavy_hitters(
@@ -81,25 +92,13 @@ def cms_heavy_hitters(
     would mean a broken sketch — pytest-pinned). Ties broken by term so
     the row set is deterministic.
 
-    At scale the probe side joins the counter grid on (row, bucket) —
-    the grid is d*w rows, broadcast regardless of corpus size."""
-    grid = F.broadcast(cms_counters(df, docid, text, depth, width))
-    h0, h1 = md5_two_hash_cols(F.col("term"), 2)[:2]
-    tf = _term_counts(df, docid, text).select(
-        "term", F.col("c").alias("exact"),
-        h0.alias("_h1"), (h1 - h0).alias("_h2"),
-    )
-    probes = tf.select(
-        "term", "exact", "_h1", "_h2",
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("row"),
-    ).select(
-        "term", "exact", "row",
-        ((F.col("_h1") + F.col("row") * F.col("_h2")) % width).alias(
-            "bucket"
-        ),
-    )
+    The per-term counts are aggregated ONCE: the probes materialize on
+    first use (lazy local checkpoint) and both the counter grid and the
+    probe side read them. The grid is d*w rows, broadcast to the probe
+    side regardless of corpus size."""
+    probes = _probes(df, text, depth, width).localCheckpoint(eager=False)
     est = (
-        probes.join(grid, ["row", "bucket"])
+        probes.join(F.broadcast(_grid(probes)), ["row", "bucket"])
         .groupBy("term", "exact")
         .agg(F.min("c").alias("est"))
     )
@@ -327,6 +326,14 @@ def hist_counters(
     )
 
 
+def _check_quantiles(qs: list[int]) -> None:
+    if not qs or any(int(q) != q or not 1 <= q <= 100 for q in qs):
+        raise ValueError(
+            f"quantiles must be a non-empty list of whole percents in "
+            f"1..100, got {qs!r}"
+        )
+
+
 def hist_quantiles(
     df: DataFrame,
     col: str,
@@ -344,10 +351,17 @@ def hist_quantiles(
     bounded by one grid cell when the sketch covers the data range —
     the accuracy contract a monitoring tick relies on.
 
+    ``qs`` must be whole percents in 1..100 and ``df`` non-empty, else
+    ``ValueError``: a target rank of 0 (``q_pct=0`` or no rows) is held
+    by no row, and its result row would silently vanish in the join.
+
     Shape: the sketch is a <= ``buckets``-row agg (mergeable, broadcast
     for the cum pass); exact goes through one sort-based window — the
     expensive verifier the sketch exists to avoid at ingest time."""
-    n_row = df.agg(F.count(F.lit(1)).alias("n"))
+    _check_quantiles(qs)
+    n = df.count()
+    if n == 0:
+        raise ValueError("hist_quantiles over an empty input: no rank exists")
     hist = hist_counters(df, col, lo, hi, buckets)
     from pyspark.sql import Window
 
@@ -358,12 +372,9 @@ def hist_quantiles(
         "bucket", F.sum("c").over(wcum).alias("cum")
     )  # <= buckets rows: the single-partition window is bounded, not a
     # data-sized sort
-    qdf = df.sparkSession.createDataFrame(
-        [(int(q),) for q in qs], "q_pct long"
-    )
-    targets = qdf.crossJoin(F.broadcast(n_row)).select(
-        "q_pct",
-        F.ceil(F.col("q_pct") * F.col("n") / F.lit(100.0)).alias("rank"),
+    targets = df.sparkSession.createDataFrame(
+        [(int(q), math.ceil(int(q) * n / 100.0)) for q in qs],
+        "q_pct long, rank long",
     )
     cell = (hi - lo) / buckets
     est = (
@@ -400,7 +411,10 @@ def hist_quantiles_sql(
 ) -> str:
     """DuckDB mirror of :func:`hist_quantiles` — same literal injection
     (the Python-computed cell width appears verbatim in both engines) and
-    the same operation order in the bucket expression."""
+    the same operation order in the bucket expression. Rejects the same
+    ``qs`` as :func:`hist_quantiles`; an empty table yields no rows here
+    (the SQL text cannot check it), where the Spark path raises."""
+    _check_quantiles(qs)
     cell = (hi - lo) / buckets
     vals = ", ".join(f"({int(q)})" for q in qs)
     bucket_expr = (

@@ -11,6 +11,7 @@ Builds the block index over the deterministic synthetic corpus and requires:
 
 from __future__ import annotations
 
+import itertools
 import math
 
 import pytest
@@ -102,6 +103,29 @@ def test_topk_distributed_pruned_matches_oracle(index, oracle, q):
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == pytest.approx(ws, abs=1e-9)
+
+
+def test_topk_distributed_pruned_distributed_planning(index, oracle,
+                                                     monkeypatch):
+    """With the block metadata too large to collect, every planning step
+    stays a Spark plan over the handle's one postings DataFrame (the
+    bytes scans self-join the metadata scan); still exact."""
+    monkeypatch.setattr(Q, "META_COLLECT_MAX", 0)
+    monkeypatch.setattr(
+        Q, "topk_distributed",
+        lambda *a, **k: pytest.fail("bailed out to the unpruned plan"),
+    )
+    for q in ("demosthenes prince andrew", "historic event"):
+        got = [
+            (r["docid"], r["score"])
+            for r in Q.topk_distributed_pruned(
+                index, q, k=5, seed_blocks_per_term=1, min_blocks=0
+            ).collect()
+        ]
+        want = oracle.topk(q, k=5)
+        assert [d for d, _ in got] == [d for d, _ in want]
+        for (gd, gs), (wd, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, abs=1e-9)
 
 
 def test_topk_distributed_pruned_small_k_and_aggressive_seed(index, oracle):
@@ -348,6 +372,67 @@ def test_versioned_index_rebuild_time_travel(spark, tmp_path_factory):
     rolled_back = [(r["docid"], r["score"])
                    for r in Q.topk_distributed(idx_v1, q, k=10).collect()]
     assert rolled_back == v1_top
+    # SNAPSHOT proof: the handle loaded before the rebuild keeps answering
+    # from the v1 tables it resolved, consistent with its v1 stats
+    still_v1 = [(r["docid"], r["score"])
+                for r in Q.topk_distributed(idx1, q, k=10).collect()]
+    assert still_v1 == v1_top
+    assert idx1.docs.count() == n1
+
+
+def test_inplace_rebuild_fails_stale_handle_loudly(spark, tmp_path_factory):
+    """A non-versioned rebuild overwrites the tables in place. A handle
+    loaded before it lists files that no longer exist: its next scan must
+    raise (not read the new tables with the old stats); a fresh
+    load_index serves the rebuild."""
+    out = str(tmp_path_factory.mktemp("ridx") / "main")
+    build_index(gen_pages_df(spark, 120, partitions=2), out, lang="en",
+                stem=False, partitions=2)
+    old = Q.load_index(spark, out)
+    q = "the gentlemen"
+    assert Q.topk_distributed(old, q, k=10).collect()
+    build_index(gen_pages_df(spark, 240, partitions=2), out, lang="en",
+                stem=False, partitions=2)
+    with pytest.raises(Exception, match="(?i)not exist|FileNotFound"):
+        Q.topk_distributed(old, q, k=10).collect()
+    new = Q.load_index(spark, out)
+    assert new.stats["n_docs"] > old.stats["n_docs"]
+    assert new.docs.count() == new.stats["n_docs"]
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the asynchronous
+    # listener bus; drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_reused_handle_job_budget(spark, index, oracle):
+    """A handle resolves each table (file listing + schema-inference job)
+    once and reuses it, so on a warm handle the interactive paths run only
+    their own collects: topk_wand a terms lookup and one block fetch,
+    a 3-term phrase_docs a metadata scan and one block fetch per term."""
+    idx = Q.load_index(spark, index.path)
+    ph = PLANTED_PHRASES[0]
+    assert len(ph.split()) == 3
+    Q.topk_wand(idx, ph, k=10)  # first use resolves terms + postings
+    got, n_wand = _spark_jobs(spark, lambda: Q.topk_wand(idx, ph, k=10))
+    assert [d for d, _ in got] == [d for d, _ in oracle.topk(ph, k=10)]
+    assert n_wand <= 2
+    docs, n_phrase = _spark_jobs(spark, lambda: Q.phrase_docs(idx, ph))
+    assert docs and docs == oracle.phrase_docs(ph)
+    assert n_phrase <= 4
 
 
 def test_topk_with_urls_stopword_stem_query(spark, index):

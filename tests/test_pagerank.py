@@ -127,10 +127,10 @@ def _py_hits(edges, iters=5, nodes=None):
     for _ in range(iters):
         auth = {v: sum(hub[u] for u, w in edges if w == v) for v in nodes}
         s = sum(auth.values())
-        auth = {v: a * n / s for v, a in auth.items()}
+        auth = {v: a * n / s if s else 0.0 for v, a in auth.items()}
         hub = {u: sum(auth[v] for x, v in edges if x == u) for u in nodes}
         s = sum(hub.values())
-        hub = {u: h * n / s for u, h in hub.items()}
+        hub = {u: h * n / s if s else 0.0 for u, h in hub.items()}
     return auth, hub
 
 
@@ -172,6 +172,47 @@ def test_hits_fixed_nodes_universe(spark):
     assert set(rows) == {0, 1, 7}
     assert rows[7]["auth"] == 0.0 and rows[7]["hub"] == 0.0
     assert rows[0]["auth"] == pytest.approx(1.5)
+
+
+@pytest.mark.parametrize(
+    "edges, has_mass",
+    [([], False), ([(0, 1), (1, 0), (1, 7)], True), ([(5, 6)], False)],
+    ids=["no_edges", "small_graph", "edges_outside_nodes"],
+)
+def test_hits_spark_equals_duckdb_on_injected_graph(spark, edges, has_mass):
+    """hits ≡ hits_sql on a given node universe {0, 1, 7}, including link
+    relations with no mass inside it (an empty edge set; an edge between
+    two nodes outside it): the L1 normalizer is then 0 and every score is
+    a defined 0 in both engines, not NULL/NaN."""
+    import duckdb
+
+    nodes = [0, 1, 7]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    ndf = spark.createDataFrame([(v,) for v in nodes], "id long")
+    got = sorted(
+        (r["id"], round(r["auth"], 6), round(r["hub"], 6))
+        for r in PR.hits(df, nodes=ndf, iters=3).collect()
+    )
+    values = ", ".join(f"({u}, {v})" for u, v in edges)
+    edges_cte = (
+        f"SELECT * FROM (VALUES {values}) t(src, dst)" if edges
+        else "SELECT NULL::BIGINT AS src, NULL::BIGINT AS dst WHERE false"
+    )
+    nodes_cte = (
+        "SELECT * FROM (VALUES "
+        + ", ".join(f"({v})" for v in nodes) + ") t(id)"
+    )
+    want = sorted(
+        duckdb.sql(
+            PR.hits_sql(iters=3, edges_cte=edges_cte, nodes_cte=nodes_cte)
+        ).fetchall()
+    )
+    assert got == want
+    mirror_a, mirror_h = _py_hits(edges, iters=3, nodes=nodes)
+    assert got == [
+        (v, round(mirror_a[v], 6), round(mirror_h[v], 6)) for v in nodes
+    ]
+    assert any(a or h for _v, a, h in got) == has_mass
 
 
 def test_pagerank_custom_graph_matches_mirror(spark):

@@ -2050,6 +2050,26 @@ def test_hist_quantiles_error_bounded_by_cell(spark):
     assert abs(got[50]["exact"] - 500) <= 1
 
 
+def test_hist_quantiles_rejects_rank_zero_requests(spark):
+    """A target rank of 0 (q_pct=0, or an empty input) is held by no row;
+    it must raise up front instead of dropping the quantile's result row
+    in the rank join. The DuckDB mirror rejects the same quantiles."""
+    from search_engine_spark.operators import sketches as SK
+
+    df = spark.createDataFrame([(float(i),) for i in range(10)], "v double")
+    for qs in ([0, 50], [50, 101], [12.5], []):
+        with pytest.raises(ValueError, match="quantiles"):
+            SK.hist_quantiles(df, "v", qs, lo=0.0, hi=10.0, buckets=10)
+        with pytest.raises(ValueError, match="quantiles"):
+            SK.hist_quantiles_sql("v", qs, lo=0.0, hi=10.0, buckets=10)
+    with pytest.raises(ValueError, match="empty"):
+        SK.hist_quantiles(df.filter("v < 0"), "v", [50], 0.0, 10.0, 10)
+    # the edges of the valid range each yield their row
+    got = {r["q_pct"]: r["exact"] for r in SK.hist_quantiles(
+        df, "v", [1, 100], lo=0.0, hi=10.0, buckets=10).collect()}
+    assert got == {1: 0.0, 100: 9.0}
+
+
 def test_hist_counters_mergeable_and_clamped(spark):
     from pyspark.sql import functions as F2
 
