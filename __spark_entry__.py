@@ -268,24 +268,12 @@ def q_bm25_index_all(spark, sf_dir):
 
 
 def q_bm25_index_topk20(spark, sf_dir):
-    """Unpruned distributed top-k at k=20 (bench twin of the pruned plan)."""
+    """Distributed top-k at k=20 (TakeOrderedAndProject over the scored
+    match set)."""
     idx = _cached_index(spark, sf_dir)
     # decimals=6: rank on the same 6-dp values the cross-engine oracle
     # ranks on (a post-hoc round can flip the k-boundary tie order)
     out = IQ.topk_distributed(idx, "spark table join", k=20, decimals=6)
-    return out.select("docid", "score")
-
-
-def q_bm25_index_pruned(spark, sf_dir):
-    """Block-max-pruned distributed top-k (3-phase exact plan): block
-    bytes of provably-sub-threshold blocks are never read. Same oracle as
-    the unpruned twin — the pruning is exact. min_blocks=0 forces the
-    3-phase path at gate scale (the adaptive default would bail out to
-    the plain plan on an index this small)."""
-    idx = _cached_index(spark, sf_dir)
-    out = IQ.topk_distributed_pruned(
-        idx, "spark table join", k=20, min_blocks=0, decimals=6
-    )
     return out.select("docid", "score")
 
 
@@ -1567,7 +1555,7 @@ def q_segments_topk(spark, sf_dir):
     level set (streaming/indexing.py shape) — global stats recomputed from
     segment tables; identical-by-construction to global BM25, which is
     exactly what the oracle SQL computes."""
-    segs = _cached_segments(spark, sf_dir)
+    segs = [IQ.load_index(spark, d) for d in _cached_segments(spark, sf_dir)]
     return IQ.topk_over_segments(spark, segs, "spark table join", k=20).select(
         "docid", F.round("score", 6).alias("score")
     )
@@ -2357,7 +2345,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lm_score": q_lm_score,
         "curation_pipeline": q_curation_pipeline,
         "bm25_index_topk20": q_bm25_index_topk20,
-        "bm25_index_pruned": q_bm25_index_pruned,
         "events_rollup": q_events_rollup,
         "snippets": q_snippets,  # serving tier (r5)
         "recency_topk": q_recency_topk,  # serving tier (r5)
@@ -2753,7 +2740,6 @@ SELECT 'title' AS method, docid, score FROM (__BM25F_TITLE__)
 """
     sqls["bm25_index_all"] = T.bm25_topk_sql_oracle("spark table join", k=10_000)
     sqls["bm25_index_topk20"] = T.bm25_topk_sql_oracle("spark table join", k=20)
-    sqls["bm25_index_pruned"] = T.bm25_topk_sql_oracle("spark table join", k=20)
     # segment search ≡ global BM25 by construction (global stats recomputed
     # over the level set) — the oracle is the plain global-BM25 mirror
     sqls["segments_topk"] = T.bm25_topk_sql_oracle("spark table join", k=20)

@@ -51,7 +51,8 @@ def main() -> None:
     if args.segments:
         from search_engine_spark.streaming.indexing import level_segments
 
-        segs = level_segments(args.segments)
+        # handles are loaded once: every query reuses their resolved tables
+        segs = [Q.load_index(spark, d) for d in level_segments(args.segments)]
         for q in args.queries:
             rows = Q.topk_over_segments(spark, segs, q, k=args.k).collect()
             print(json.dumps({

@@ -396,12 +396,6 @@ FROM isl2 GROUP BY docid, island
 # Shingling
 # ---------------------------------------------------------------------------
 
-def shingle_array_col(text: str | Column, n: int = DEFAULT_SHINGLE) -> Column:
-    """array<string> of DISTINCT word n-gram shingles — a single per-row
-    expression (no explode, no shuffle)."""
-    return _shingles_from_tokens(tokens_col(text), n)
-
-
 def _shingles_from_tokens(toks: Column, n: int) -> Column:
     # Guard: for docs with fewer than n tokens, sequence(0, size-n) would
     # run DOWNWARD (step defaults to -1 when start > stop) and slice() then

@@ -349,22 +349,6 @@ def apply_robots(
     return cand.join(hits, url, "left_anti")
 
 
-def apply_robots_sql(cand_select: str, robots_sql: str) -> str:
-    """DuckDB mirror of :func:`apply_robots` over a (host, url) relation
-    produced by ``cand_select`` and a (host, disallow) rule set from
-    ``robots_sql``."""
-    return f"""
-WITH cand AS ({cand_select}),
-robots AS ({robots_sql}),
-blocked AS (
-  SELECT DISTINCT c.url
-  FROM cand c JOIN robots r ON c.host = r.host
-  WHERE starts_with(regexp_replace(c.url, '{_PREFIX_RE}', ''), r.disallow)
-)
-SELECT host, url FROM cand WHERE url NOT IN (SELECT url FROM blocked)
-"""
-
-
 def apply_robots_fmw_sql(cand_select: str, robots_sql: str) -> str:
     """DuckDB mirror of the first-match-wins branch of
     :func:`apply_robots`: ``robots_sql`` yields

@@ -715,14 +715,3 @@ def _build_index_inner(
         json.dump(stats, fh, indent=1)
     return stats
 
-
-def merge_index_stats(a: dict, b: dict) -> dict:
-    """Merged-corpus stats (MergeIndexes semantics, reference
-    jobs/MergeIndexes.java:45-127): doc sets assumed disjoint."""
-    n = a["n_docs"] + b["n_docs"]
-    avgdl = (
-        (a["avgdl"] * a["n_docs"] + b["avgdl"] * b["n_docs"]) / n if n else 0.0
-    )
-    out = dict(a)
-    out.update({"n_docs": n, "avgdl": avgdl})
-    return out

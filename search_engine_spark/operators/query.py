@@ -24,16 +24,18 @@ the stored positions via a two-pointer offset merge.
 
 from __future__ import annotations
 
+import bisect
 import heapq
 import json
 import os
 from collections.abc import Iterator
 from dataclasses import dataclass
-from functools import cached_property
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from search_engine_spark.catalog import Warehouse
 from search_engine_spark.functions.codec import decode_block_np
@@ -121,30 +123,48 @@ def parse_query(query: str, stem: bool = True) -> list[str]:
 # Distributed exact top-k
 # ---------------------------------------------------------------------------
 
-def _decode_rows_idf(
+def _decode_postings(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """(block, idf) batches → (docid, tf, dl, idf) posting rows."""
+    """(block, *carry) batches → (docid, tf, dl, *carry) posting rows. Each
+    carried column (idf, term, ...) repeats once per posting of its block,
+    so one Python loop over the blobs serves every distributed BM25 plan."""
     for pdf in batches:
-        d_l, t_l, l_l, i_l = [], [], [], []
-        for blob, idf in zip(pdf["block"], pdf["idf"]):
-            d, t, dl = decode_block_np(bytes(blob))
-            d_l.append(d)
-            t_l.append(t)
-            l_l.append(dl)
-            i_l.append(np.full(len(d), float(idf)))
-        if not d_l:
+        if pdf.empty:
             continue
-        yield pd.DataFrame(
-            {"docid": np.concatenate(d_l),
-             "tf": np.concatenate(t_l),
-             "dl": np.concatenate(l_l),
-             "idf": np.concatenate(i_l)}
+        ds, tfs, dls = zip(
+            *(decode_block_np(bytes(blob)) for blob in pdf["block"])
         )
+        counts = [len(d) for d in ds]
+        out = {
+            "docid": np.concatenate(ds),
+            "tf": np.concatenate(tfs),
+            "dl": np.concatenate(dls),
+        }
+        for col in pdf.columns:
+            if col != "block":
+                out[col] = np.repeat(pdf[col].to_numpy(), counts)
+        yield pd.DataFrame(out)
 
 
-def _bm25_part_col(avgdl: float):
-    return (
+def _decode(blocks: DataFrame) -> DataFrame:
+    """Decode the ``block`` column of ``blocks`` into posting rows; every
+    other column is carried through (see :func:`_decode_postings`)."""
+    carry = [f for f in blocks.schema.fields if f.name != "block"]
+    schema = StructType(
+        [StructField(c, LongType()) for c in ("docid", "tf", "dl")] + carry
+    )
+    return blocks.mapInPandas(_decode_postings, schema=schema)
+
+
+def _bm25_scores(
+    postings: DataFrame, avgdl: float, decimals: int, keys=("docid",)
+) -> DataFrame:
+    """Sum the BM25 partials of (docid, tf, dl, idf) posting rows per
+    ``keys``. The sum is rounded to ``decimals`` BEFORE any ranking — a
+    post-hoc round can disagree with a consumer that ranks at the rounded
+    precision (two docs 1e-9 apart straddling the k boundary)."""
+    part = (
         F.col("idf") * F.col("tf") * F.lit(K1 + 1.0)
         / (
             F.col("tf")
@@ -152,6 +172,28 @@ def _bm25_part_col(avgdl: float):
             * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
         )
     )
+    return postings.groupBy(*keys).agg(
+        F.round(F.sum(part), decimals).alias("score")
+    )
+
+
+def _top_k(scored: DataFrame, k: int, per: str | None = None) -> DataFrame:
+    """The k best rows by (score desc, docid asc): one global
+    ORDER BY ... LIMIT (TakeOrderedAndProject), or, with ``per``, the k
+    best of each ``per`` group with their 1-based ``rank``."""
+    order = (F.col("score").desc(), F.col("docid").asc())
+    if per is None:
+        return scored.orderBy(*order).limit(k)
+    w = Window.partitionBy(per).orderBy(*order)
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(per, "docid", "score", "rank")
+    )
+
+
+def _no_hits(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], "docid long, score double")
 
 
 def topk_distributed(
@@ -160,35 +202,24 @@ def topk_distributed(
     """(docid, score) top-k as a Spark plan. The term filter is pushed into
     the parquet scan (term-sorted layout → row-group pruning).
 
-    ``decimals``: scores are ROUNDED BEFORE the (score desc, docid asc)
-    ranking, not after — a post-hoc round can disagree with a consumer
-    that ranks at the rounded precision (two docs 1e-9 apart straddling
-    the k boundary). Pass the precision the consumer compares at (the
-    cross-engine gate uses 6)."""
+    ``decimals``: the precision scores are rounded to before the (score
+    desc, docid asc) ranking. Pass the precision the consumer compares at
+    (the cross-engine gate uses 6)."""
     terms = parse_query(query, stem=index.stats.get("stem", True))
-    spark = index.spark
     if not terms:
-        return spark.createDataFrame([], "docid long, score double")
-    avgdl = index.stats["avgdl"]
-
-    blocks = index.postings.filter(F.col("term").isin(terms))
+        return _no_hits(index.spark)
     tstats = index.terms.filter(F.col("term").isin(terms)).select("term", "idf")
-
-    withidf = blocks.join(F.broadcast(tstats), "term")
-
+    blocks = (
+        index.postings.filter(F.col("term").isin(terms))
+        .join(F.broadcast(tstats), "term")
+        .select("block", "idf")
+    )
     # decode blocks → (docid, tf, dl, idf) rows → exact BM25 partial → sum
     # per doc. dl is colocated in the block (codec v3), so the query plan
     # needs NO join against the docs table — at 10^12 docs that join was a
     # postings-sized shuffle; now the only shuffle is the final groupBy.
-    decoded = withidf.select("block", "idf").mapInPandas(
-        _decode_rows_idf, schema="docid long, tf long, dl long, idf double"
-    )
-    scored = (
-        decoded.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(F.round(F.sum("part"), decimals).alias("score"))
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+    scored = _bm25_scores(_decode(blocks), index.stats["avgdl"], decimals)
+    return _top_k(scored, k)
 
 
 def topk_with_deletes(
@@ -221,7 +252,7 @@ def topk_with_deletes(
     terms = parse_query(query, stem=index.stats.get("stem", True))
     spark = index.spark
     if not terms:
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(spark)
     dele = (
         deleted.select(
             F.col(deleted.columns[0]).cast("long").alias("docid")
@@ -238,7 +269,7 @@ def topk_with_deletes(
     )
     n_live = int(index.stats["n_docs"]) - int(adj["n_del"])
     if n_live <= 0:
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(spark)
     sum_dl_live = (
         float(index.stats["avgdl"]) * int(index.stats["n_docs"])
         - float(adj["dl_del"])
@@ -246,387 +277,80 @@ def topk_with_deletes(
     avgdl_live = sum_dl_live / n_live
 
     blocks = index.postings.filter(F.col("term").isin(terms)).select(
-        "term", "block", F.lit(0.0).alias("idf")  # idf joined post-mask
+        "term", "block"
     )
-    live = blocks.mapInPandas(
-        _decode_rows_idf_term,
-        schema="term string, docid long, tf long, dl long, idf double",
-    ).drop("idf").join(dele, "docid", "left_anti")
+    live = _decode(blocks).join(dele, "docid", "left_anti")
     df_live = live.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     tstats = df_live.select(
         "term", bm25_idf_col(n_live, F.col("df")).alias("idf")
     )
-    scored = (
-        live.join(F.broadcast(tstats), "term")
-        .withColumn("part", _bm25_part_col(avgdl_live))
-        .groupBy("docid")
-        .agg(F.round(F.sum("part"), decimals).alias("score"))
+    scored = _bm25_scores(
+        live.join(F.broadcast(tstats), "term"), avgdl_live, decimals
     )
-    return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
-
-
-def _decode_rows_idf_term(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """(term, block, idf) batches → (term, docid, tf, dl, idf) rows —
-    the term column rides along so downstream can track which terms
-    contributed to a doc's partial score."""
-    for pdf in batches:
-        t_out, d_l, t_l, l_l, i_l = [], [], [], [], []
-        for term, blob, idf in zip(pdf["term"], pdf["block"], pdf["idf"]):
-            d, t, dl = decode_block_np(bytes(blob))
-            d_l.append(d)
-            t_l.append(t)
-            l_l.append(dl)
-            i_l.append(np.full(len(d), float(idf)))
-            t_out.append(np.full(len(d), term, dtype=object))
-        if not d_l:
-            continue
-        yield pd.DataFrame(
-            {"term": np.concatenate(t_out),
-             "docid": np.concatenate(d_l),
-             "tf": np.concatenate(t_l),
-             "dl": np.concatenate(l_l),
-             "idf": np.concatenate(i_l)}
-        )
-
-
-BLOCK_KEY = ["term", "bucket", "block_id"]
-
-# Above this many metadata rows the pruned-plan's planning decisions stay
-# distributed; below it they collect to the driver (fewer fixed jobs).
-META_COLLECT_MAX = 20_000
-
-
-def topk_distributed_pruned(
-    index: Index,
-    query: str,
-    k: int = 100,
-    seed_blocks_per_term: int = 2,
-    max_candidates: int = 200_000,
-    min_blocks: int = 256,
-    decimals: int = SCORE_ROUND,
-) -> DataFrame:
-    """(docid, score) — EXACT top-k with Block-Max pruning as a
-    distributed plan: the Ding & Suel block-max idea (driver path:
-    ``topk_wand``) restructured into three bulk phases so block skipping
-    works without document-at-a-time coordination. Replaces the
-    reference's posting-list sampling (frontend/Master.java:356-391,
-    ≤2000 random docs per term) with exact pruning.
-
-    1. **Seed θ**: decode only the ``seed_blocks_per_term`` highest-
-       upper-bound blocks per term; the k-th best PARTIAL score is a
-       valid lower bound θ on the true k-th best score.
-    2. **Prune + partial score**: a block of term t survives iff
-       ``ub(b) + Σ_{t'≠t} max_ub(t') ≥ θ``. Every doc whose blocks are
-       all pruned is provably below θ (each posting's contribution is ≤
-       its block's ub). Decode ONLY survivors — block bytes of pruned
-       blocks are never read (two scans of the postings table: a
-       metadata projection without the bytes column, then a bytes scan
-       semi-joined to surviving keys). Docs keep the set of terms that
-       contributed, so the remaining headroom is
-       ``slack(d) = Σ_{t ∉ present(d)} max_pruned_ub(t)``.
-    3. **Exact rescore**: candidates = docs with
-       ``partial + slack ≥ θ``. Their missing contributions live only in
-       pruned blocks whose [first_docid, last_docid] range contains a
-       candidate; decode exactly those, filter decoded rows to the
-       candidate set, add in, take the global top-k.
-
-    Rank- and score-identical to ``topk_distributed`` (tested). Adaptive
-    bailouts to the plain plan keep it never-worse in the regimes where
-    pruning cannot pay: fewer than ``min_blocks`` total blocks for the
-    query's terms (each extra phase is a full Spark job + Python-worker
-    roundtrip — with a handful of blocks the single-job full decode is
-    already cheaper than one phase), or a candidate set larger than
-    ``max_candidates`` (θ barely prunes → the full plan is the right
-    plan). θ is slackened by 1e-9 so float drift between the stored
-    block_max and recomputed per-row parts can only under-prune, never
-    over-prune."""
-    terms = parse_query(query, stem=index.stats.get("stem", True))
-    spark = index.spark
-    if not terms:
-        return spark.createDataFrame([], "docid long, score double")
-    avgdl = index.stats["avgdl"]
-    tstats = index.terms.filter(F.col("term").isin(terms)).select(
-        "term", "idf"
-    )
-
-    # --- metadata projection: NO block bytes read in this scan
-    meta = (
-        index.postings.filter(F.col("term").isin(terms))
-        .select(*BLOCK_KEY, "first_docid", "last_docid", "n", "block_max")
-        .join(F.broadcast(tstats), "term")
-        .withColumn("ub", F.col("idf") * F.col("block_max"))
-    )
-    # small-metadata fast path: when the query's block metadata fits on
-    # the driver, collect it ONCE and make every planning decision
-    # (per-term maxima, seed selection, pruned maxima) locally — this
-    # removes two aggregate jobs and a window from the fixed latency,
-    # which dominates on small/medium indexes. Large metadata (stop-word
-    # terms over a huge corpus) keeps the fully distributed planning.
-    meta_rows = meta.limit(META_COLLECT_MAX + 1).collect()
-    meta_local = meta_rows if len(meta_rows) <= META_COLLECT_MAX else None
-    if len(meta_rows) < min_blocks:
-        return topk_distributed(index, query, k, decimals=decimals)
-    if meta_local is not None:
-        per_term = {}
-        for r in meta_local:
-            per_term[r["term"]] = max(
-                per_term.get(r["term"], 0.0), float(r["ub"])
-            )
-    else:
-        per_term = {
-            r["term"]: float(r["mx"])
-            for r in meta.groupBy("term").agg(F.max("ub").alias("mx")).collect()
-        }
-    if not per_term:
-        return spark.createDataFrame([], "docid long, score double")
-    sum_all = sum(per_term.values())
-
-    def _bytes_for(keys_df: DataFrame) -> DataFrame:
-        """Bytes scan restricted (term-pushdown + key join) to keys_df."""
-        return (
-            index.postings.filter(F.col("term").isin(terms))
-            .select(*BLOCK_KEY, "block")
-            .join(F.broadcast(keys_df), BLOCK_KEY)
-        )
-
-    # --- phase 1: seed θ from the top blocks per term
-    if meta_local is not None:
-        by_term: dict[str, list] = {}
-        for r in meta_local:
-            by_term.setdefault(r["term"], []).append(r)
-        seed_local = []
-        for t, rows in by_term.items():
-            rows.sort(key=lambda r: (-r["ub"], r["bucket"], r["block_id"]))
-            seed_local.extend(rows[:seed_blocks_per_term])
-        seed_keys = spark.createDataFrame(
-            [(r["term"], r["bucket"], r["block_id"]) for r in seed_local],
-            "term string, bucket int, block_id int",
-        )
-    else:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("term").orderBy(
-            F.col("ub").desc(), F.col("bucket").asc(), F.col("block_id").asc()
-        )
-        seed_keys = (
-            meta.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= seed_blocks_per_term)
-            .select(*BLOCK_KEY)
-        )
-    seed_rows = (
-        _bytes_for(seed_keys.select(*BLOCK_KEY))
-        .join(F.broadcast(tstats), "term")
-        .select("term", "block", "idf")
-        .mapInPandas(
-            _decode_rows_idf_term,
-            schema="term string, docid long, tf long, dl long, idf double",
-        )
-    )
-    seed_top = (
-        seed_rows.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(F.sum("part").alias("score"))
-        .orderBy(F.col("score").desc(), F.col("docid").asc())
-        .limit(k)
-        .collect()
-    )
-    if len(seed_top) < k:
-        # seed couldn't even fill k — tiny index; pruning pointless
-        return topk_distributed(index, query, k, decimals=decimals)
-    # θ slack = one ulp at the EMITTED precision: a doc pruned by θ must
-    # not be able to round into a tie with the kth kept score (the 1e-9
-    # default generalizes to any ``decimals``)
-    theta = float(seed_top[-1]["score"]) - max(1e-9, 10.0 ** -decimals)
-
-    # --- phase 2: prune blocks, partial-score survivors with term sets
-    rest = {t: sum_all - mx for t, mx in per_term.items()}
-    pruned_schema = (
-        "term string, bucket int, block_id int, "
-        "first_docid long, last_docid long"
-    )
-    if meta_local is not None:
-        surv_local = [
-            r for r in meta_local if r["ub"] + rest[r["term"]] >= theta
-        ]
-        pruned_local = [
-            r for r in meta_local if r["ub"] + rest[r["term"]] < theta
-        ]
-        surviving = spark.createDataFrame(
-            [(r["term"], r["bucket"], r["block_id"]) for r in surv_local],
-            "term string, bucket int, block_id int",
-        )
-        pruned = spark.createDataFrame(
-            [
-                (r["term"], r["bucket"], r["block_id"],
-                 r["first_docid"], r["last_docid"])
-                for r in pruned_local
-            ],
-            pruned_schema,
-        )
-        pruned_max = {}
-        for r in pruned_local:
-            pruned_max[r["term"]] = max(
-                pruned_max.get(r["term"], 0.0), float(r["ub"])
-            )
-    else:
-        rest_expr = F.lit(None).cast("double")
-        for t, r in rest.items():
-            rest_expr = F.when(F.col("term") == t, F.lit(r)).otherwise(
-                rest_expr
-            )
-        meta = meta.withColumn("rest", rest_expr)
-        surviving = meta.filter(F.col("ub") + F.col("rest") >= theta)
-        pruned = meta.filter(F.col("ub") + F.col("rest") < theta)
-        pruned_max = {
-            r["term"]: float(r["mx"])
-            for r in pruned.groupBy("term")
-            .agg(F.max("ub").alias("mx"))
-            .collect()
-        }
-    surv_rows = (
-        _bytes_for(surviving.select(*BLOCK_KEY))
-        .join(F.broadcast(tstats), "term")
-        .select("term", "block", "idf")
-        .mapInPandas(
-            _decode_rows_idf_term,
-            schema="term string, docid long, tf long, dl long, idf double",
-        )
-    )
-    partial = (
-        surv_rows.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(
-            F.sum("part").alias("pscore"),
-            F.collect_set("term").alias("present"),
-        )
-    )
-    if pruned_max:
-        slack = F.lit(0.0)
-        for t, mx in pruned_max.items():
-            slack = slack + F.when(
-                F.array_contains(F.col("present"), t), F.lit(0.0)
-            ).otherwise(F.lit(mx))
-    else:
-        slack = F.lit(0.0)
-    cands = (
-        partial.withColumn("slack", slack)
-        .filter(F.col("pscore") + F.col("slack") >= theta)
-        .localCheckpoint()  # referenced by phase-3 join AND final union
-    )
-    n_cands = cands.count()
-    if n_cands > max_candidates:
-        return topk_distributed(index, query, k, decimals=decimals)
-
-    # --- phase 3: exact rescore of candidates from intersecting pruned
-    # blocks only (docid-range containment against the candidate set)
-    cand_ids = cands.select("docid")
-    needed = (
-        pruned.join(
-            F.broadcast(cand_ids),
-            (F.col("docid") >= F.col("first_docid"))
-            & (F.col("docid") <= F.col("last_docid")),
-            "left_semi",
-        )
-        .select(*BLOCK_KEY)
-    )
-    pruned_rows = (
-        _bytes_for(needed)
-        .join(F.broadcast(tstats), "term")
-        .select("term", "block", "idf")
-        .mapInPandas(
-            _decode_rows_idf_term,
-            schema="term string, docid long, tf long, dl long, idf double",
-        )
-        .join(F.broadcast(cand_ids), "docid", "left_semi")
-    )
-    extra = (
-        pruned_rows.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(F.sum("part").alias("xscore"))
-    )
-    exact = (
-        cands.join(extra, "docid", "left")
-        .select(
-            "docid",
-            F.round(
-                F.col("pscore") + F.coalesce(F.col("xscore"), F.lit(0.0)),
-                decimals,
-            ).alias("score"),
-        )
-    )
-    return exact.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+    return _top_k(scored, k)
 
 
 def topk_over_segments(
-    spark: SparkSession, seg_dirs: list[str], query: str, k: int = 100
+    spark: SparkSession, segments: list[Index], query: str, k: int = 100
 ) -> DataFrame:
     """Search a log-structured LEVEL SET without collapsing it — the
     mid-stream query path for the incremental indexer
     (streaming/indexing.py): each segment stays as-built; only global
     statistics are recomputed.
 
-    ``seg_dirs`` are ordered oldest → newest (docid offsets accumulate in
-    that order, matching what a collapse via merge_indexes would assign).
-    Global n_docs/avgdl come from segment stats; global per-term df is the
-    sum over the segments' terms tables (pruned, tiny scans) → global idf
-    driver-side. Each segment's pruned postings decode with the GLOBAL
-    idf/avgdl and docids shift by the segment offset; one union + one
+    ``segments`` are index handles ordered oldest → newest. Docids shift
+    by each earlier segment's docid space, in that order — the shift
+    :func:`~search_engine_spark.operators.merge.merge_indexes` applies, so
+    a token-less page (a docid with no postings) cannot make two
+    segments' docids collide. Global n_docs/avgdl come from segment
+    stats; global per-term df is the sum over the segments' terms tables
+    (one pruned, tiny collect) → global idf driver-side. Each segment's
+    pruned postings decode with the GLOBAL idf/avgdl; one union + one
     groupBy scores everything. Result is identical to querying the
-    collapsed index (tested to 1e-9). Every call loads fresh segment
-    handles, so each call pays each segment's table resolution (file
-    listing + schema inference) again."""
+    collapsed index (tested to 1e-9). Handles are snapshots (see
+    :class:`Index`): a caller that reuses them across queries pays each
+    segment's table resolution once."""
     from search_engine_spark.oracle.bm25 import bm25_idf
 
-    idxs = [load_index(spark, d) for d in seg_dirs]
-    if not idxs:
-        return spark.createDataFrame([], "docid long, score double")
-    terms = parse_query(query, stem=idxs[0].stats.get("stem", True))
+    if not segments:
+        return _no_hits(spark)
+    terms = parse_query(query, stem=segments[0].stats.get("stem", True))
     if not terms:
-        return spark.createDataFrame([], "docid long, score double")
-    n_docs = sum(ix.stats["n_docs"] for ix in idxs)
+        return _no_hits(spark)
+    n_docs = sum(ix.stats["n_docs"] for ix in segments)
     avgdl = (
-        sum(ix.stats["avgdl"] * ix.stats["n_docs"] for ix in idxs) / n_docs
+        sum(ix.stats["avgdl"] * ix.stats["n_docs"] for ix in segments)
+        / n_docs
         if n_docs
         else 0.0
     )
+    lookups = [
+        ix.terms.filter(F.col("term").isin(terms)).select("term", "df")
+        for ix in segments
+    ]
     df_global: dict[str, int] = {}
-    for ix in idxs:
-        for r in (
-            ix.terms.filter(F.col("term").isin(terms))
-            .select("term", "df")
-            .collect()
-        ):
-            df_global[r["term"]] = df_global.get(r["term"], 0) + int(r["df"])
+    for r in reduce(DataFrame.unionByName, lookups).collect():
+        df_global[r["term"]] = df_global.get(r["term"], 0) + int(r["df"])
     if not df_global:
-        return spark.createDataFrame([], "docid long, score double")
+        return _no_hits(spark)
     idf_rows = [(t, bm25_idf(n_docs, d)) for t, d in sorted(df_global.items())]
     tstats = F.broadcast(
         spark.createDataFrame(idf_rows, "term string, idf double")
     )
     offset = 0
     parts = []
-    for ix in idxs:
-        blocks = ix.postings.filter(
-            F.col("term").isin(list(df_global))
-        ).join(tstats, "term")
-        decoded = blocks.select("block", "idf").mapInPandas(
-            _decode_rows_idf, schema="docid long, tf long, dl long, idf double"
+    for ix in segments:
+        blocks = (
+            ix.postings.filter(F.col("term").isin(list(df_global)))
+            .join(tstats, "term")
+            .select("block", "idf")
         )
         parts.append(
-            decoded.withColumn("docid", F.col("docid") + F.lit(offset))
+            _decode(blocks).withColumn("docid", F.col("docid") + F.lit(offset))
         )
-        offset += ix.stats["n_docs"]
-    union = parts[0]
-    for p in parts[1:]:
-        union = union.unionByName(p)
-    scored = (
-        union.withColumn("part", _bm25_part_col(avgdl))
-        .groupBy("docid")
-        .agg(F.round(F.sum("part"), SCORE_ROUND).alias("score"))
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("docid").asc()).limit(k)
+        offset += ix.stats.get("docid_space", ix.stats["n_docs"])
+    postings = reduce(DataFrame.unionByName, parts)
+    return _top_k(_bm25_scores(postings, avgdl, SCORE_ROUND), k)
 
 
 def topk_batch(
@@ -640,8 +364,10 @@ def topk_batch(
     fans each posting out to the queries that contain its term; one
     aggregation scores every (qid, docid); a per-qid window takes top-k.
     Thousands of queries amortize into a single pass over the index — the
-    batch analogue of ``topk_distributed`` (which this reuses nothing from
-    at runtime: one scan TOTAL, not one per query)."""
+    batch analogue of ``topk_distributed``, with the same decode, scoring
+    and tie semantics (one scan TOTAL, not one per query). ``decimals``
+    defaults to the library-wide SCORE_ROUND; gate entries pass 6 to rank
+    on the exact values their cross-engine oracle ranks on."""
     spark = index.spark
     q_terms = {
         qid: parse_query(q, stem=index.stats.get("stem", True))
@@ -653,7 +379,6 @@ def topk_batch(
             [], "qid long, docid long, score double, rank int"
         )
     all_terms = sorted({t for _, t in pairs})
-    avgdl = index.stats["avgdl"]
 
     qmap = spark.createDataFrame(pairs, "qid long, term string")
     tstats = index.terms.filter(F.col("term").isin(all_terms)).select(
@@ -662,59 +387,15 @@ def topk_batch(
     blocks = index.postings.filter(F.col("term").isin(all_terms)).select(
         "term", "block"
     )
-
-    def decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t_l, d_l, f_l, l_l = [], [], [], []
-            for term, blob in zip(pdf["term"], pdf["block"]):
-                d, t, dl = decode_block_np(bytes(blob))
-                t_l.extend([term] * len(d))
-                d_l.append(d)
-                f_l.append(t)
-                l_l.append(dl)
-            if not d_l:
-                continue
-            yield pd.DataFrame(
-                {"term": pd.Series(t_l, dtype="object"),
-                 "docid": np.concatenate(d_l),
-                 "tf": np.concatenate(f_l),
-                 "dl": np.concatenate(l_l)}
-            )
-
-    decoded = blocks.mapInPandas(
-        decode_rows, schema="term string, docid long, tf long, dl long"
-    )
-    from pyspark.sql import Window
-
-    from search_engine_spark.oracle.bm25 import B, K1
-
-    scored = (
-        decoded.join(F.broadcast(tstats), "term")
+    postings = (
+        _decode(blocks)
+        .join(F.broadcast(tstats), "term")
         .join(F.broadcast(qmap), "term")
-        .withColumn(
-            "part",
-            F.col("idf") * F.col("tf") * F.lit(K1 + 1.0)
-            / (
-                F.col("tf")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-            ),
-        )
-        .groupBy("qid", "docid")
-        # rank on the same emission-rounded value (decimals defaults to
-        # the library-wide SCORE_ROUND so batch and single-query paths
-        # implement ONE tie semantics; gate entries pass 6 to rank on the
-        # exact values their cross-engine oracle ranks on)
-        .agg(F.round(F.sum("part"), decimals).alias("score"))
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("docid").asc()
+    scored = _bm25_scores(
+        postings, index.stats["avgdl"], decimals, keys=("qid", "docid")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "docid", "score", "rank")
-    )
+    return _top_k(scored, k, per="qid")
 
 
 # ---------------------------------------------------------------------------
@@ -724,7 +405,7 @@ def topk_batch(
 class _Cursor:
     """Posting cursor over the (bucket, block_id)-ordered blocks of a term.
 
-    Blocks decode lazily; ``shallow_advance`` moves across block metadata
+    Blocks decode lazily; ``next_geq`` moves across block metadata
     without decoding (the block-max skip)."""
 
     __slots__ = (
@@ -739,10 +420,6 @@ class _Cursor:
         self.idf = idf
         self.blocks = blocks
         self.bi = 0
-        self.docids: list[int] = []
-        self.tfs: list[int] = []
-        self.dls: list[int] = []
-        self.pi = 0
         # global upper bound = idf · max block_max (standard WAND term UB)
         self.ub = idf * max(b[2] for b in blocks) if blocks else 0.0
         self._load()
@@ -750,13 +427,12 @@ class _Cursor:
     _EMPTY = np.empty(0, dtype=np.int64)
 
     def _load(self) -> None:
+        self.pi = 0
         if self.bi < len(self.blocks):
             d, t, dl = decode_block_np(self.blocks[self.bi][3])
             self.docids, self.tfs, self.dls = d, t, dl
-            self.pi = 0
         else:
             self.docids = self.tfs = self.dls = self._EMPTY
-            self.pi = 0
 
     @property
     def exhausted(self) -> bool:
@@ -829,14 +505,11 @@ def _fetch_term_blocks(index: Index, terms: list[str]) -> dict[str, list[tuple]]
         .collect()
     )
     out: dict[str, list[tuple]] = {}
-    for r in rows:
+    for r in sorted(rows, key=lambda r: (r["bucket"], r["block_id"])):
         out.setdefault(r["term"], []).append(
-            (r["bucket"], r["block_id"], r["first_docid"], r["last_docid"],
-             r["block_max"], bytes(r["block"]), r["n"])
+            (r["first_docid"], r["last_docid"], r["block_max"],
+             bytes(r["block"]), r["n"])
         )
-    for t in out:
-        out[t].sort(key=lambda x: (x[0], x[1]))
-        out[t] = [(f, l, m, b, n) for (_bk, _bi, f, l, m, b, n) in out[t]]
     return out
 
 
@@ -850,8 +523,6 @@ def _topk_bulk(
     every block, compute BM25 partials array-at-a-time, sum per docid via
     sorted reduceat, partial-select top-k. Exact — same result as WAND —
     and ~100× faster than the Python DAAT loop when pruning cannot help."""
-    from search_engine_spark.oracle.bm25 import B, K1
-
     d_l, p_l = [], []
     for t, blks in blocks.items():
         idf = idfs[t]
@@ -895,20 +566,16 @@ DRIVER_POSTINGS_MAX = 2_000_000
 
 
 def topk_wand(
-    index: Index,
-    query: str,
-    k: int = 100,
-    strategy: str = "auto",
-    driver_postings_max: int | None = None,
+    index: Index, query: str, k: int = 100
 ) -> list[tuple[int, float]]:
     """Exact BM25 top-k, driver-side (the interactive path).
 
-    ``strategy="auto"`` picks between two EXACT executions over the same
-    partition-pruned block fetch: document-at-a-time Block-Max WAND
-    (Ding & Suel 2011) when the query terms are selective enough for
-    block skipping to pay, and vectorized exhaustive scoring
-    (``_topk_bulk``) when the posting lists cover most of the corpus —
-    there a Python posting-at-a-time loop is pure overhead because no
+    Picks between two EXACT executions over the same partition-pruned
+    block fetch: document-at-a-time Block-Max WAND (Ding & Suel 2011) when
+    the query terms are selective enough for block skipping to pay, and
+    vectorized exhaustive scoring (``_topk_bulk``) when the posting lists
+    cover at least :data:`BULK_SCORE_DF_FRACTION` of the corpus per term
+    — there a Python posting-at-a-time loop is pure overhead because no
     block can be skipped. Both return [(docid, score)] sorted
     (score desc, docid asc), identical to the exhaustive oracle.
 
@@ -918,13 +585,10 @@ def topk_wand(
     index handle; fatal at 10^12 docs).
 
     Driver-memory guard: the terms lookup below also reads ``df``, and
-    when the query's total posting count exceeds ``driver_postings_max``
-    (default :data:`DRIVER_POSTINGS_MAX`) the block bytes are NEVER
-    collected — the call hands off to ``topk_distributed_pruned`` and
-    returns its (rank- and score-identical) result. The preflight costs
-    zero extra Spark jobs."""
-    if driver_postings_max is None:
-        driver_postings_max = DRIVER_POSTINGS_MAX
+    when the query's total posting count exceeds
+    :data:`DRIVER_POSTINGS_MAX` the block bytes are NEVER collected — the
+    call hands off to ``topk_distributed`` and returns its (rank- and
+    score-identical) result. The preflight costs zero extra Spark jobs."""
     terms = parse_query(query, stem=index.stats.get("stem", True))
     if not terms:
         return []
@@ -935,20 +599,13 @@ def topk_wand(
         .collect()
     )
     idfs = {r["term"]: r["idf"] for r in trows}
-    if sum(r["df"] for r in trows) > driver_postings_max:
-        rows = topk_distributed_pruned(index, query, k).collect()
+    if sum(r["df"] for r in trows) > DRIVER_POSTINGS_MAX:
+        rows = topk_distributed(index, query, k).collect()
         return [(int(r["docid"]), float(r["score"])) for r in rows]
     blocks = _fetch_term_blocks(index, [t for t in terms if t in idfs])
-    if strategy == "auto":
-        n_docs = max(1, index.stats["n_docs"])
-        total_postings = sum(
-            sum(b[4] for b in blks) for blks in blocks.values()
-        )
-        per_term = total_postings / max(1, len(blocks))
-        strategy = (
-            "bulk" if per_term >= BULK_SCORE_DF_FRACTION * n_docs else "wand"
-        )
-    if strategy == "bulk":
+    n_docs = max(1, index.stats["n_docs"])
+    total_postings = sum(sum(b[4] for b in blks) for blks in blocks.values())
+    if total_postings / max(1, len(blocks)) >= BULK_SCORE_DF_FRACTION * n_docs:
         return _topk_bulk(blocks, idfs, avgdl, k)
     cursors = [
         _Cursor(t, idfs[t], blocks[t]) for t in terms if blocks.get(t)
@@ -1050,16 +707,11 @@ def topk_wand(
         # asc) contract would drop
         push(pivot_doc, round(s, SCORE_ROUND))
 
-    out = sorted(
+    return sorted(
         ((-d, round(s, SCORE_ROUND)) for s, d in heap),
         key=lambda x: (-x[1], x[0]),
     )
-    return [(d, s) for d, s in out]
 
-
-# ---------------------------------------------------------------------------
-# Phrase search
-# ---------------------------------------------------------------------------
 
 # ---------------------------------------------------------------------------
 # Result assembly: url + snippet (the reference frontend's answer shape)
@@ -1176,6 +828,10 @@ def topk_with_urls(
     )
 
 
+# ---------------------------------------------------------------------------
+# Phrase search
+# ---------------------------------------------------------------------------
+
 def _phrase_term_offsets(phrase: str) -> dict[str, list[int]]:
     """unique term → 0-based offsets of its occurrences in the phrase."""
     terms = [t for t, _ in tokenize(phrase, stem=False, cap=None)]
@@ -1185,9 +841,7 @@ def _phrase_term_offsets(phrase: str) -> dict[str, list[int]]:
     return offs
 
 
-def phrase_docs(
-    index: Index, phrase: str, driver_postings_max: int | None = None
-) -> list[int]:
+def phrase_docs(index: Index, phrase: str) -> list[int]:
     """Docids containing the exact adjacent token phrase — driver path.
 
     Scale shape (reference IndexerProjectPhraseSearch.java:407-440's
@@ -1221,9 +875,7 @@ def phrase_docs(
     # the rarest term is decoded IN FULL on the driver and bounds the
     # candidate set every later fetch is keyed by. Past the threshold,
     # hand off to the fully distributed plan — identical result set.
-    if driver_postings_max is None:
-        driver_postings_max = DRIVER_POSTINGS_MAX
-    if df_by_term[order[0]] > driver_postings_max:
+    if df_by_term[order[0]] > DRIVER_POSTINGS_MAX:
         return sorted(
             int(r["docid"])
             for r in phrase_docs_distributed(index, phrase).collect()
@@ -1251,8 +903,6 @@ def phrase_docs(
             cand = sorted(starts)
             if not cand:
                 return []
-            import bisect
-
             need: set[tuple[int, int]] = set()
             for bk, bi, fd, ld in meta[t]:
                 j = bisect.bisect_left(cand, fd)

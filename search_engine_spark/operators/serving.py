@@ -309,28 +309,6 @@ def page_after(
     )
 
 
-def page_after_sql(
-    hits_sql: str,
-    after_score: float,
-    after_docid,
-    k: int = 10,
-) -> str:
-    """DuckDB mirror of :func:`page_after`."""
-    d = (
-        f"'{after_docid}'"
-        if isinstance(after_docid, str)
-        else repr(after_docid)
-    )
-    return f"""
-WITH pool AS ({hits_sql})
-SELECT * FROM pool
-WHERE score < {after_score!r}
-   OR (score = {after_score!r} AND docid > {d})
-ORDER BY score DESC, docid ASC
-LIMIT {k}
-"""
-
-
 # ---------------------------------------------------------------------------
 # Proximity-boosted ranking (2-term min-span bonus)
 # ---------------------------------------------------------------------------

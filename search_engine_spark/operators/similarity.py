@@ -654,11 +654,12 @@ def mmr_rerank_sql(
     k: int = 5,
     pool: int = 20,
     lam: float = 0.7,
-    dims: int = 64,
 ) -> str:
     """DuckDB mirror of :func:`mmr_rerank` over the embeddings table with
     query vector = row ``qid`` (excluded from candidates) — the same
-    unrolled greedy steps as MATERIALIZED CTEs."""
+    unrolled greedy steps as MATERIALIZED CTEs. The dot products run over
+    each row's own ``len(embedding)``, like the Spark side, so any
+    embedding dimension works."""
     om = 1.0 - lam
     ctes = [
         f"q AS MATERIALIZED (SELECT embedding AS qv FROM embeddings"
@@ -673,7 +674,8 @@ def mmr_rerank_sql(
                     * sqrt(sum(list_extract(q.qv, g.i)::DOUBLE
                                * list_extract(q.qv, g.i)::DOUBLE))),
                  6) AS rel
-    FROM embeddings e, q, unnest(generate_series(1, {dims})) AS g(i)
+    FROM embeddings e, q,
+         unnest(generate_series(1, len(e.embedding))) AS g(i)
     WHERE e.vec_id <> {qid}
     GROUP BY e.vec_id, e.embedding)
   ORDER BY rel DESC, vec_id ASC LIMIT {pool})""",
@@ -692,7 +694,8 @@ def mmr_rerank_sql(
                   * sqrt(sum(list_extract(s.emb, g.i)::DOUBLE
                              * list_extract(s.emb, g.i)::DOUBLE))),
                6) AS sim
-  FROM cand c, sel{i - 1} s, unnest(generate_series(1, {dims})) AS g(i)
+  FROM cand c, sel{i - 1} s,
+       unnest(generate_series(1, len(c.emb))) AS g(i)
   WHERE c.vec_id NOT IN (SELECT vec_id FROM sel{i - 1})
   GROUP BY c.vec_id, c.rel, c.emb, s.vec_id)""")
         ctes.append(

@@ -21,9 +21,11 @@ searchable without rebuilding the world. This module adds that surface:
 ``run_ingest(availableNow)`` drains all pending files then collapses the
 remaining levels into one serving index and atomically updates the
 ``SERVING`` pointer. Mid-stream, the level set is DIRECTLY searchable
-without collapsing: ``level_segments(work_dir)`` →
-``operators.query.topk_over_segments`` recomputes global stats over the
-segments and returns results identical to the merged index (tested).
+without collapsing: ``level_segments(work_dir)`` lists the segment dirs;
+``operators.query.topk_over_segments`` takes their ``load_index`` handles,
+recomputes global stats over the segments and returns results identical
+to the merged index (tested). A caller that keeps the handles across
+queries resolves each segment's tables once.
 """
 
 from __future__ import annotations
@@ -192,7 +194,8 @@ def vacuum(work_dir: str) -> list[str]:
 
 def level_segments(work_dir: str) -> list[str]:
     """The current level set as segment dirs, oldest → newest (highest
-    level holds the oldest docs). Feed to
+    level holds the oldest docs). Load each with
+    ``operators.query.load_index`` and pass the handles to
     ``operators.query.topk_over_segments`` to search the tree MID-STREAM
     without collapsing it."""
     state = _load_state(work_dir)

@@ -89,67 +89,6 @@ def test_topk_distributed_matches_oracle(index, oracle, q):
 
 
 @pytest.mark.parametrize("q", QUERIES)
-def test_topk_distributed_pruned_matches_oracle(index, oracle, q):
-    """The 3-phase block-max-pruned distributed plan is EXACT: identical
-    docids AND scores to the oracle (and hence to topk_distributed) for
-    every query shape — multi-term, stopword-only, zero-hit term."""
-    got = [
-        (r["docid"], r["score"])
-        for r in Q.topk_distributed_pruned(
-            index, q, k=50, min_blocks=0
-        ).collect()
-    ]
-    want = oracle.topk(q, k=50)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    for (gd, gs), (wd, ws) in zip(got, want):
-        assert gs == pytest.approx(ws, abs=1e-9)
-
-
-def test_topk_distributed_pruned_distributed_planning(index, oracle,
-                                                     monkeypatch):
-    """With the block metadata too large to collect, every planning step
-    stays a Spark plan over the handle's one postings DataFrame (the
-    bytes scans self-join the metadata scan); still exact."""
-    monkeypatch.setattr(Q, "META_COLLECT_MAX", 0)
-    monkeypatch.setattr(
-        Q, "topk_distributed",
-        lambda *a, **k: pytest.fail("bailed out to the unpruned plan"),
-    )
-    for q in ("demosthenes prince andrew", "historic event"):
-        got = [
-            (r["docid"], r["score"])
-            for r in Q.topk_distributed_pruned(
-                index, q, k=5, seed_blocks_per_term=1, min_blocks=0
-            ).collect()
-        ]
-        want = oracle.topk(q, k=5)
-        assert [d for d, _ in got] == [d for d, _ in want]
-        for (gd, gs), (wd, ws) in zip(got, want):
-            assert gs == pytest.approx(ws, abs=1e-9)
-
-
-def test_topk_distributed_pruned_small_k_and_aggressive_seed(index, oracle):
-    """k=5 with a 1-block seed prunes hardest; still exact. k larger than
-    the match set falls back to the unpruned plan and stays exact; so
-    does the default min_blocks bailout on this small index."""
-    q = "demosthenes prince andrew"
-    got = [
-        (r["docid"], r["score"])
-        for r in Q.topk_distributed_pruned(
-            index, q, k=5, seed_blocks_per_term=1, min_blocks=0
-        ).collect()
-    ]
-    want = oracle.topk(q, k=5)
-    assert [d for d, _ in got] == [d for d, _ in want]
-    big = Q.topk_distributed_pruned(index, "gentlemen", k=100_000, min_blocks=0)
-    ref = Q.topk_distributed(index, "gentlemen", k=100_000)
-    assert sorted((r["docid"], round(r["score"], 9)) for r in big.collect()) \
-        == sorted((r["docid"], round(r["score"], 9)) for r in ref.collect())
-    bail = Q.topk_distributed_pruned(index, q, k=5)  # default min_blocks
-    assert [(r["docid"],) for r in bail.collect()] == [(d,) for d, _ in want]
-
-
-@pytest.mark.parametrize("q", QUERIES)
 def test_topk_wand_matches_oracle(index, oracle, q):
     got = Q.topk_wand(index, q, k=50)
     want = oracle.topk(q, k=50)
@@ -159,11 +98,13 @@ def test_topk_wand_matches_oracle(index, oracle, q):
 
 
 @pytest.mark.parametrize("q", QUERIES)
-def test_topk_strategies_identical(index, oracle, q):
+def test_topk_strategies_identical(index, oracle, q, monkeypatch):
     """Forced DAAT-WAND and forced vectorized-bulk must return identical
-    (docid, score) lists — 'auto' only ever picks between these two."""
-    wand = Q.topk_wand(index, q, k=40, strategy="wand")
-    bulk = Q.topk_wand(index, q, k=40, strategy="bulk")
+    (docid, score) lists — topk_wand only ever picks between these two."""
+    monkeypatch.setattr(Q, "BULK_SCORE_DF_FRACTION", float("inf"))
+    wand = Q.topk_wand(index, q, k=40)
+    monkeypatch.setattr(Q, "BULK_SCORE_DF_FRACTION", 0.0)
+    bulk = Q.topk_wand(index, q, k=40)
     assert [d for d, _ in wand] == [d for d, _ in bulk]
     for (_, a), (_, b) in zip(wand, bulk):
         assert a == pytest.approx(b, abs=1e-9)
@@ -192,8 +133,8 @@ def test_wand_small_k_prunes_but_exact(index, oracle):
 
 
 def test_topk_wand_driver_guard_falls_back(index, oracle, monkeypatch):
-    """Above ``driver_postings_max`` the interactive path must NEVER
-    collect block bytes — it hands off to topk_distributed_pruned with an
+    """Above ``DRIVER_POSTINGS_MAX`` the interactive path must NEVER
+    collect block bytes — it hands off to topk_distributed with an
     identical result. _fetch_term_blocks is poisoned to prove the bytes
     collect does not run when the guard fires."""
     q = "bloodthirsty soldier"
@@ -202,16 +143,18 @@ def test_topk_wand_driver_guard_falls_back(index, oracle, monkeypatch):
         Q, "_fetch_term_blocks",
         lambda *a, **k: pytest.fail("guard did not fire: bytes collected"),
     )
-    got = Q.topk_wand(index, q, k=25, driver_postings_max=0)
+    monkeypatch.setattr(Q, "DRIVER_POSTINGS_MAX", 0)
+    got = Q.topk_wand(index, q, k=25)
     assert got == want
     assert [d for d, _ in got] == [d for d, _ in oracle.topk(q, k=25)]
 
 
-def test_phrase_docs_driver_guard_falls_back(index, oracle):
+def test_phrase_docs_driver_guard_falls_back(index, oracle, monkeypatch):
     """phrase_docs above the postings threshold must return the
     distributed plan's result — identical doc set."""
     ph = PLANTED_PHRASES[0]
-    assert Q.phrase_docs(index, ph, driver_postings_max=0) == (
+    monkeypatch.setattr(Q, "DRIVER_POSTINGS_MAX", 0)
+    assert Q.phrase_docs(index, ph) == (
         oracle.phrase_docs(ph)
     )
 
@@ -433,6 +376,20 @@ def test_reused_handle_job_budget(spark, index, oracle):
     docs, n_phrase = _spark_jobs(spark, lambda: Q.phrase_docs(idx, ph))
     assert docs and docs == oracle.phrase_docs(ph)
     assert n_phrase <= 4
+
+
+def test_reused_segment_handles_job_budget(spark, index):
+    """topk_over_segments takes index handles, so a caller that keeps them
+    pays each segment's table resolution once: from the second call on,
+    a 2-segment query runs one terms lookup plus the scoring plan."""
+    segs = [Q.load_index(spark, index.path) for _ in range(2)]
+    q = "demosthenes prince andrew"
+    first = Q.topk_over_segments(spark, segs, q, k=10).collect()
+    got, n_jobs = _spark_jobs(
+        spark, lambda: Q.topk_over_segments(spark, segs, q, k=10).collect()
+    )
+    assert got and got == first
+    assert n_jobs <= 5
 
 
 def test_topk_with_urls_stopword_stem_query(spark, index):

@@ -87,10 +87,11 @@ def test_merged_phrases_match_union(spark, dirs):
 def test_segment_query_matches_merged(spark, dirs):
     """topk_over_segments searches the un-collapsed segment set with
     recomputed global stats — identical result to the merged index."""
+    segs = [Q.load_index(spark, dirs[s]) for s in ("a", "b")]
     for q in ["gentlemen", "prince andrew", "historic event"]:
         got = [
             (r["docid"], r["score"])
-            for r in Q.topk_over_segments(spark, [dirs["a"], dirs["b"]], q, k=30).collect()
+            for r in Q.topk_over_segments(spark, segs, q, k=30).collect()
         ]
         want = [
             (r["docid"], r["score"])
@@ -117,10 +118,11 @@ def test_three_segment_query_matches_union_build(spark, dirs, tmp_path_factory):
         a2, lang="en", partitions=4,
     )
     u = Q.load_index(spark, dirs["u"])
+    segs = [Q.load_index(spark, d) for d in (a1, a2, dirs["b"])]
     for q in ["gentlemen", "historic event"]:
         got = [
             (r["docid"], r["score"])
-            for r in Q.topk_over_segments(spark, [a1, a2, dirs["b"]], q, k=30).collect()
+            for r in Q.topk_over_segments(spark, segs, q, k=30).collect()
         ]
         want = [
             (r["docid"], r["score"])
@@ -185,3 +187,31 @@ def test_merge_versioned_indexes(spark, tmp_path_factory):
     assert idx.docs.count() == 2
     got = {d for d, _s in Q.topk_wand(idx, "beta", k=10)}
     assert got == {0, 1}
+
+
+def test_segment_query_shifts_by_docid_space(spark, tmp_path_factory):
+    """A token-less page consumes a docid but not a doc count, so segment
+    b must start past a's docid SPACE (as merge_indexes shifts it): with
+    an n_docs shift b's first doc landed on a's last one and two
+    documents summed into one docid."""
+    base = tmp_path_factory.mktemp("segspace")
+    a_dir, b_dir, m_dir = str(base / "a"), str(base / "b"), str(base / "m")
+    build_index(
+        _pages(spark, [("u0", "alpha beta"), ("u1", "..."),  # token-less!
+                       ("u2", "alpha gamma")]),
+        a_dir, stem=False, partitions=2,
+    )
+    build_index(
+        _pages(spark, [("v0", "delta epsilon"), ("v1", "beta delta")]),
+        b_dir, stem=False, partitions=2,
+    )
+    merge_indexes(spark, a_dir, b_dir, m_dir)
+    segs = [Q.load_index(spark, d) for d in (a_dir, b_dir)]
+    q = "alpha delta"
+    got = [tuple(r) for r in Q.topk_over_segments(spark, segs, q, k=10).collect()]
+    want = [
+        tuple(r)
+        for r in Q.topk_distributed(Q.load_index(spark, m_dir), q, k=10).collect()
+    ]
+    assert len(want) == 4
+    assert got == want

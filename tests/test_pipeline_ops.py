@@ -1724,6 +1724,36 @@ def test_mmr_penalizes_redundancy(spark):
     assert got[1] == 1 and got[2] == 3 and got[3] == 2
 
 
+def test_mmr_rerank_sql_follows_embedding_dimension(spark):
+    """The DuckDB mirror takes the dimension from the embeddings
+    themselves: on a 96-dim table it agrees with the Spark re-rank (a
+    fixed 64-step series scored only the first 64 components)."""
+    import random
+
+    import duckdb
+
+    rng = random.Random(11)
+    rows = [
+        (i, [round(rng.uniform(-1, 1), 3) for _ in range(96)])
+        for i in range(25)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = sorted(
+        tuple(r)
+        for r in S.mmr_rerank(
+            df, rows[0][1], k=4, pool=10, lam=0.7, exclude_self=0
+        ).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    want = sorted(
+        con.sql(S.mmr_rerank_sql(qid=0, k=4, pool=10, lam=0.7)).fetchall()
+    )
+    assert len(got) == 4
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # Event-sequence analytics (operators/events.py: funnel, retention)
 # ---------------------------------------------------------------------------

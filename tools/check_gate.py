@@ -8,13 +8,14 @@ strings). Usage: python tools/check_gate.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from search_engine_spark.session import get_spark  # noqa: E402
