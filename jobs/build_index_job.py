@@ -12,8 +12,11 @@ Cluster usage (north_rule launch mode):
     #   cd /root/repo && zip -r se_spark.zip search_engine_spark
 
 With --chunks > 0 the build runs through the resumable checkpoint path
-(plans/checkpoint.py): per-chunk lineage + metrics, safe to re-submit after
-a failure. Local smoke run:
+(plans/checkpoint.py): the same stages as build_index with the tokenize
+stage cut into that many chunks, per-stage lineage + metrics, safe to
+re-submit after a failure (the ranged snapshot and committed chunks are
+reused). --partitions applies to the single-shot build only. Local smoke
+run:
 
     python jobs/build_index_job.py --input /tmp/pages --output /tmp/idx
 """

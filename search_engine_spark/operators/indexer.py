@@ -47,11 +47,10 @@ Index warehouse layout (directory = one index):
 from __future__ import annotations
 
 import json
-import math
 import os
 from collections.abc import Iterator
+from contextlib import contextmanager
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from search_engine_spark.catalog import Warehouse
@@ -81,79 +80,31 @@ BLOCKS_SCHEMA = (
 # Stage 1: docid assignment (distributed dense rank by url)
 # ---------------------------------------------------------------------------
 
-def assign_docids(
-    pages: DataFrame,
-    partitions: int | None = None,
-    scratch_dir: str | None = None,
-) -> DataFrame:
-    """(url, text, …) → same plus dense ``docid`` = rank of url (0-based).
+def ranged_snapshot(
+    src: DataFrame, snap_path: str, parts: int, from_html: bool = False
+) -> dict[int, int]:
+    """Write ``src`` range-partitioned and sorted by url, tagged with
+    ``_pid``, to ``snap_path``; return the per-partition docid offsets
+    (docid = offset[_pid] + ordinal in the partition, see module doc).
 
-    Scale-safe distributed dense rank, equivalent to
-    ``row_number() over (order by url) - 1`` with no single-partition window
-    (the reference's sequential driver counter,
-    IndexerProject.java:210-235, is the anti-pattern this replaces):
-
-      1. range-partition by url, sort within partitions, tag
-         ``spark_partition_id`` and MATERIALIZE the snapshot to
-         ``scratch_dir``. The write pins one sampling of the range
-         boundaries — ``repartitionByRange`` re-samples per action, so an
-         unmaterialized plan could assign different partition ids between
-         the counting pass and downstream consumers (a silent duplicate-id
-         bug; caught by an ascending-docid assertion in the block encoder).
-      2. per-partition counts (driver holds one long per partition),
-         prefix-sum → partition offsets.
-      3. docid = offset[_pid] + (row_number over _pid ordered by url) − 1 —
-         windows are per-partition, bounded by the chunk size.
-
-    On a cluster ``scratch_dir`` must be shared storage (the docs-table
-    staging area); it defaults to a local temp dir here.
+    The write pins ONE sampling of the range boundaries:
+    ``repartitionByRange`` re-samples per action, so an unmaterialized
+    plan could assign different partition ids between the counting pass
+    and downstream consumers — a silent duplicate-id bug.
     """
-    import tempfile
-
-    spark = pages.sparkSession
-    parts = partitions or spark.sparkContext.defaultParallelism
-    if scratch_dir is None:
-        scratch_dir = tempfile.mkdtemp(prefix="se_docids_")
-    snap_path = os.path.join(scratch_dir, "ranged_snapshot")
     (
-        pages.repartitionByRange(parts, "url")
+        src.select("url", "html" if from_html else "text")
+        .repartitionByRange(parts, "url")
         .sortWithinPartitions("url")
         .withColumn("_pid", F.spark_partition_id())
         .write.mode("overwrite")
         .option("compression", "lz4")
         .parquet(snap_path)
     )
-    snap = spark.read.parquet(snap_path)
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in snap.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    from pyspark.sql import Window
-
-    offset_map = F.create_map(
-        *[F.lit(x) for kv in offsets.items() for x in kv]
-    )
-    w = Window.partitionBy("_pid").orderBy("url")
-    return (
-        snap.withColumn(
-            "docid",
-            offset_map[F.col("_pid")] + F.row_number().over(w) - 1,
-        )
-        .drop("_pid")
-    )
+    return docid_offsets(src.sparkSession, snap_path)
 
 
-# ---------------------------------------------------------------------------
-# Stage 1b: fused docid assignment + tokenize (no window shuffle)
-# ---------------------------------------------------------------------------
-
-def _docid_offsets(spark, snap_path: str) -> dict[int, int]:
+def docid_offsets(spark, snap_path: str) -> dict[int, int]:
     """Per-partition docid offsets from the materialized ranged snapshot."""
     snap = spark.read.parquet(snap_path)
     counts = {
@@ -168,6 +119,26 @@ def _docid_offsets(spark, snap_path: str) -> dict[int, int]:
     return offsets
 
 
+@contextmanager
+def whole_snapshot_files(spark: SparkSession) -> Iterator[None]:
+    """Docid assignment (``_RunningIds``) requires each snapshot FILE to
+    be read whole by one task; Spark splits files larger than
+    maxPartitionBytes (default 128 MB) across tasks, which would give each
+    half its own counter starting at offset+0 → duplicate docids. Pin the
+    split size above any realistic snapshot file for the duration of a
+    build and restore afterwards."""
+    conf = spark.conf
+    saved_mpb = conf.get("spark.sql.files.maxPartitionBytes", None)
+    conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
+    try:
+        yield
+    finally:
+        if saved_mpb is None:
+            conf.unset("spark.sql.files.maxPartitionBytes")
+        else:
+            conf.set("spark.sql.files.maxPartitionBytes", saved_mpb)
+
+
 class _RunningIds:
     """Streaming docid assignment over batches of the ranged snapshot.
 
@@ -178,7 +149,7 @@ class _RunningIds:
     (interleaved pids). It cannot see a snapshot file split ACROSS tasks
     (both halves would restart the pid's counter at offset+0 in separate
     workers) — that failure is caught by the global count/distinct/max
-    docid invariant checked in ``_build_index_inner``.
+    docid invariant checked in ``assemble_index``.
     """
 
     def __init__(self, offsets: dict[int, int]):
@@ -226,6 +197,10 @@ def docid_url_table(spark, snap_path: str, offsets: dict[int, int]) -> DataFrame
     return snap.mapInArrow(run, schema="docid long, url string")
 
 
+# ---------------------------------------------------------------------------
+# Stage 2: tokenize → (docid, term, tf, positions, dl)
+# ---------------------------------------------------------------------------
+
 def tokenize_postings_from_snapshot(
     spark,
     snap_path: str,
@@ -233,11 +208,15 @@ def tokenize_postings_from_snapshot(
     stem: bool = True,
     cap: int | None = None,
     from_html: bool = False,
+    pids: range | None = None,
 ) -> DataFrame:
-    """Fused stage 1b+2: stream the ranged snapshot, assign docids on the
-    fly (no window, no extra shuffle of the text) and tokenize.
+    """Stream the ranged snapshot, assign docids on the fly (no window, no
+    extra shuffle of the text) and tokenize: one row per (docid, distinct
+    term) with tf, varint positions and the doc length ``dl``.
     ``from_html`` runs the pinned HTML→text extraction first (the full
-    Common-Crawl pipeline; reference IndexerProject.java:262-276)."""
+    Common-Crawl pipeline; reference IndexerProject.java:262-276).
+    ``pids`` keeps only that range of snapshot partitions (a resumable
+    build's chunk); parquet statistics skip the other files."""
     import numpy as np
     import pyarrow as pa
 
@@ -249,6 +228,8 @@ def tokenize_postings_from_snapshot(
     # pruned pass) — the content column dominates this scan, don't pay a
     # second full url decode on the biggest read of the build
     snap = spark.read.parquet(snap_path).select(content_col, "_pid")
+    if pids is not None:
+        snap = snap.filter(F.col("_pid").between(pids.start, pids.stop - 1))
     b_off = spark.sparkContext.broadcast(offsets)
     kw = {} if cap is None else {"cap": cap}
 
@@ -306,76 +287,6 @@ def tokenize_postings_from_snapshot(
             yield flush()
 
     return snap.mapInArrow(run, schema=POSTINGS_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Stage 2: tokenize → (docid, term, tf, positions, dl)
-# ---------------------------------------------------------------------------
-
-def tokenize_postings(
-    docs: DataFrame,
-    docid: str = "docid",
-    text: str = "text",
-    stem: bool = True,
-    cap: int | None = None,
-) -> DataFrame:
-    """Reference-parity tokenization as a vectorized Arrow stage.
-
-    One output row per (docid, distinct term): tf + 1-based positions over
-    valid tokens, Porter dual-indexing (original and stem both emitted at
-    the same position when they differ — IndexerProject.java:378-400),
-    1500-token cap, plus the document length ``dl`` (number of capped valid
-    positions) repeated on every row so BM25 stats need no extra join.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    src = docs.select(F.col(docid).alias("docid"), F.col(text).alias("text"))
-    kw = {} if cap is None else {"cap": cap}
-
-    from search_engine_spark.functions.codec import encode_positions
-
-    out_schema = pa.schema(
-        [
-            ("docid", pa.int64()),
-            ("term", pa.string()),
-            ("tf", pa.int32()),
-            ("positions", pa.binary()),
-            ("dl", pa.int32()),
-        ]
-    )
-
-    def run(batches):
-        # arrow-native output; positions emitted as the block format's
-        # per-posting varint section (flat binary — no integer arrays).
-        for batch in batches:
-            docids_in = batch.column(0).to_pylist()
-            texts_in = batch.column(1).to_pylist()
-            o_docid: list[int] = []
-            o_term: list[str] = []
-            o_tf: list[int] = []
-            o_dl: list[int] = []
-            o_pos: list[bytes] = []
-            for did, txt in zip(docids_in, texts_in):
-                per_term, dl = doc_postings(txt or "", stem=stem, **kw)
-                for term, plist in per_term.items():
-                    o_docid.append(did)
-                    o_term.append(term)
-                    o_tf.append(len(plist))
-                    o_dl.append(dl)
-                    o_pos.append(encode_positions(plist))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(np.asarray(o_docid, dtype=np.int64)),
-                    pa.array(o_term, pa.string()),
-                    pa.array(np.asarray(o_tf, dtype=np.int32)),
-                    pa.array(o_pos, pa.binary()),
-                    pa.array(np.asarray(o_dl, dtype=np.int32)),
-                ],
-                schema=out_schema,
-            )
-
-    return src.mapInArrow(run, schema=POSTINGS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -584,62 +495,39 @@ def build_index(
     spark = pages.sparkSession
     parts = partitions or spark.sparkContext.defaultParallelism
     src = pages.filter(F.col("lang") == lang) if lang else pages
-
-    # Docid assignment (_RunningIds) requires each snapshot FILE to be read
-    # whole by one task; Spark splits files larger than maxPartitionBytes
-    # (default 128 MB) across tasks, which would give each half its own
-    # counter starting at offset+0 → duplicate docids. Pin the split size
-    # above any realistic snapshot file for the duration of the build and
-    # restore afterwards. (The closed-set assertion in _RunningIds remains
-    # the loud backstop if this is ever defeated.)
-    conf = spark.conf
-    saved_mpb = conf.get("spark.sql.files.maxPartitionBytes", None)
-    conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
-    try:
-        return _build_index_inner(
-            spark, src, out_dir, lang, stem, cap, postings_per_bucket,
-            block_size, parts, from_html, versioned,
-        )
-    finally:
-        if saved_mpb is None:
-            conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            conf.set("spark.sql.files.maxPartitionBytes", saved_mpb)
-
-
-def _build_index_inner(
-    spark, src, out_dir, lang, stem, cap, postings_per_bucket,
-    block_size, parts, from_html, versioned=False,
-) -> dict:
-    # table commits go through the Warehouse abstraction: Iceberg snapshot
-    # commits when a catalog is configured, identical parquet layout here
-    wh = Warehouse(spark, out_dir, versioned=versioned)
-    # stage 1: materialize the url-range-partitioned, sorted snapshot ONCE
-    # (pins one sampling of the range boundaries — see assign_docids doc)
     snap_path = os.path.join(out_dir, "_stage", "ranged_snapshot")
-    (
-        src.select("url", "html" if from_html else "text")
-        .repartitionByRange(parts, "url")
-        .sortWithinPartitions("url")
-        .withColumn("_pid", F.spark_partition_id())
-        .write.mode("overwrite")
-        .option("compression", "lz4")
-        .parquet(snap_path)
-    )
-    offsets = _docid_offsets(spark, snap_path)
-
-    # stage 2 (fused with docid assignment — no window, no extra shuffle of
-    # the text): materialize the tokenized postings ONCE as a scratch
-    # parquet table (the natural checkpoint boundary): columnar caching of
-    # 10^7+ rows does not scale with cores, a lz4 parquet roundtrip does —
-    # and every downstream consumer (doc stats, term stats, block build)
-    # reads the same snapshot.
     raw_path = os.path.join(out_dir, "_stage", "postings_raw")
-    tokenize_postings_from_snapshot(
-        spark, snap_path, offsets, stem=stem, cap=cap, from_html=from_html
-    ).write.mode("overwrite").option("compression", "lz4").parquet(raw_path)
-    postings = spark.read.parquet(raw_path)
+    with whole_snapshot_files(spark):
+        # stage 1: materialize the url-range-partitioned, sorted snapshot
+        offsets = ranged_snapshot(src, snap_path, parts, from_html)
+        # stage 2 (fused with docid assignment — no window, no extra
+        # shuffle of the text): materialize the tokenized postings ONCE as
+        # a scratch parquet table (the natural checkpoint boundary):
+        # columnar caching of 10^7+ rows does not scale with cores, a lz4
+        # parquet roundtrip does — and every downstream consumer (doc
+        # stats, term stats, block build) reads the same snapshot.
+        tokenize_postings_from_snapshot(
+            spark, snap_path, offsets, stem=stem, cap=cap, from_html=from_html
+        ).write.mode("overwrite").option("compression", "lz4").parquet(raw_path)
+        # table commits go through the Warehouse abstraction: Iceberg
+        # snapshot commits when a catalog is configured, identical parquet
+        # layout here
+        return assemble_index(
+            Warehouse(spark, out_dir, versioned=versioned),
+            spark.read.parquet(raw_path), snap_path, offsets, parts,
+            postings_per_bucket, block_size, stem=stem, cap=cap, lang=lang,
+        )
 
+
+def assemble_index(
+    wh: Warehouse, postings: DataFrame, snap_path: str,
+    offsets: dict[int, int], parts: int, postings_per_bucket: int,
+    block_size: int, **meta,
+) -> dict:
+    """Stages 3–4 of every build: tokenized ``postings`` + the ranged
+    snapshot → docs/terms/postings tables committed through ``wh`` and
+    ``stats.json`` (``meta`` is recorded there too); returns the stats."""
+    spark = wh.spark
     # doc table + global stats; dl is carried on posting rows — one
     # max-aggregation against the column-pruned (docid, url) map.
     id_map = docid_url_table(spark, snap_path, offsets)
@@ -704,14 +592,12 @@ def _build_index_inner(
         "n_docs": n_docs,
         "docid_space": docid_space,
         "avgdl": avgdl,
-        "stem": stem,
-        "cap": cap,
         "block_size": block_size,
         "postings_per_bucket": postings_per_bucket,
-        "lang": lang,
+        **meta,
     }
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "stats.json"), "w") as fh:
+    os.makedirs(wh.root, exist_ok=True)
+    with open(os.path.join(wh.root, "stats.json"), "w") as fh:
         json.dump(stats, fh, indent=1)
     return stats
 

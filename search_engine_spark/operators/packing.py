@@ -12,9 +12,9 @@ Scale architecture: the only primitive needed is a GLOBAL EXCLUSIVE
 PREFIX SUM of per-doc token counts in doc order — the naive
 ``sum() over (order by docid)`` window is a single-task bottleneck (one
 partition holds the whole corpus), so :func:`exclusive_prefix_sum`
-reuses the two-phase pattern of ``indexer.assign_docids``
-(reference anti-pattern it replaces: IndexerProject.java:210-235's
-sequential driver counter):
+reuses the two-phase pattern of the indexer's docid assignment
+(``indexer.ranged_snapshot``; reference anti-pattern it replaces:
+IndexerProject.java:210-235's sequential driver counter):
 
   1. range-partition by the order key, sort within partitions, and
      MATERIALIZE the snapshot (``repartitionByRange`` re-samples range

@@ -3,23 +3,28 @@
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics". The reference's KVS persistence (append log + recovery replay,
 /root/reference/src/cis5550/kvs/Worker.java:279-353) restarts whole jobs;
-here the build is chunked over the docid space and each chunk commits
-independently:
+here ``build_index``'s own stages (operators/indexer.py) run chunked and
+each commits independently:
 
     out_dir/
-      raw/chunk=<i>/          tokenized postings for docid-range chunk i
-      lineage/                one parquet row per completed chunk:
+      _stage/ranged_snapshot/ the build's url-range snapshot (stage 1)
+      raw/chunk=<i>/          tokenized postings of chunk i: a contiguous
+                              range of snapshot partitions (``_pid``)
+      lineage/                one parquet row per committed stage —
+                              snapshot, tokenize (one per chunk), assemble:
                               (chunk_id, stage, status, rows, wall_ms,
-                               input_fingerprint)
-      postings/ terms/ docs/ stats.json   final index (operators/indexer)
-      metrics/                stage-level wall/rows metrics
+                               input_fingerprint, ts)
+      postings/ terms/ docs/ stats.json   final index (assemble_index)
 
-Crash semantics: a chunk directory is only recorded in lineage AFTER its
-parquet write succeeds (write-then-commit ordering); re-running
-``resumable_build`` skips chunks whose lineage row matches the input
-fingerprint, re-runs the rest, and the final assembly is a deterministic
-function of the raw chunks — so any prefix of a crashed build is reusable
-and the result is identical to a single-shot build (tested).
+Crash semantics: a stage is only recorded in lineage AFTER its parquet
+write succeeds (write-then-commit ordering); re-running
+``resumable_build`` reuses the snapshot if the newest snapshot row matches
+the input fingerprint, skips chunks committed since that snapshot and
+re-runs the rest. Chunks are partition ranges of the kept snapshot, so
+they never depend on re-sampled range boundaries; the assembly is a
+deterministic function of the snapshot and the raw chunks — so any prefix
+of a crashed build is reusable and the result is identical to a
+single-shot build (tested).
 
 In production each commit is an Iceberg snapshot (atomic); the parquet
 directory + lineage-row protocol here has the same shape with the
@@ -28,20 +33,23 @@ container's toolset.
 
 from __future__ import annotations
 
-import json
 import os
+import re
+import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from search_engine_spark.catalog import Warehouse
+from search_engine_spark.functions.codec import DEFAULT_BLOCK_SIZE
 from search_engine_spark.operators.indexer import (
     DEFAULT_POSTINGS_PER_BUCKET,
-    assign_docids,
-    build_blocks_arrow,
-    term_stats,
-    tokenize_postings,
+    assemble_index,
+    docid_offsets,
+    ranged_snapshot,
+    tokenize_postings_from_snapshot,
+    whole_snapshot_files,
 )
-from search_engine_spark.functions.codec import DEFAULT_BLOCK_SIZE
 
 LINEAGE_SCHEMA = (
     "chunk_id int, stage string, status string, rows long, wall_ms long, "
@@ -61,10 +69,17 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 
-def _append_lineage(spark: SparkSession, out_dir: str, row: dict) -> None:
+def _append_lineage(
+    spark: SparkSession, out_dir: str, stage: str, chunk_id: int,
+    rows: int, t0: float, fp: str,
+) -> float:
+    """Record one completed stage in lineage; returns its commit time."""
+    ts = time.time()
+    row = (chunk_id, stage, "ok", rows, int((ts - t0) * 1000), fp, ts)
     spark.createDataFrame([row], LINEAGE_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(_lineage_path(out_dir))
+    return ts
 
 
 def corpus_fingerprint(docs: DataFrame) -> str:
@@ -86,133 +101,83 @@ def resumable_build(
     cap: int | None = None,
     postings_per_bucket: int = DEFAULT_POSTINGS_PER_BUCKET,
     block_size: int = DEFAULT_BLOCK_SIZE,
-    fail_after_chunk: int | None = None,
 ) -> dict:
-    """Chunked, restartable index build. ``fail_after_chunk`` injects a
-    crash after that many chunk commits (for the kill/resume test)."""
+    """Chunked, restartable ``build_index``: one ranged snapshot, the
+    tokenize stage run chunk by chunk over contiguous ranges of its
+    partitions, then ``build_index``'s assembly over all chunks."""
     spark = pages.sparkSession
     src = pages.filter(F.col("lang") == lang) if lang else pages
-    docs = assign_docids(src.select("url", "text"), partitions=n_chunks)
-    docs.persist()
-    n_total = docs.count()
-    # the fingerprint covers the chunk LAYOUT too: a lineage row from a run
-    # with a different n_chunks describes different docid ranges and must
-    # not mark this run's chunks as done
-    fp = f"{corpus_fingerprint(docs)}:c{n_chunks}"
-    chunk_span = max(1, (n_total + n_chunks - 1) // n_chunks)
+    # every chunk spans a full default-parallelism's worth of partitions
+    parts = n_chunks * spark.sparkContext.defaultParallelism
+    # the fingerprint covers the chunk LAYOUT and the tokenizer settings
+    # too: a lineage row from a run with a different layout describes
+    # different partitions and must not mark this run's chunks as done
+    fp = f"{corpus_fingerprint(src)}:c{n_chunks}:p{parts}:s{int(stem)}:k{cap}"
+    lineage = read_lineage(spark, out_dir).filter("status = 'ok'").collect()
+    snap_path = os.path.join(out_dir, "_stage", "ranged_snapshot")
 
-    done = {
-        r["chunk_id"]
-        for r in read_lineage(spark, out_dir)
-        .filter(
-            (F.col("stage") == "tokenize")
-            & (F.col("status") == "ok")
-            & (F.col("input_fingerprint") == fp)
+    with whole_snapshot_files(spark):
+        last = max(
+            (r for r in lineage if r["stage"] == "snapshot"),
+            key=lambda r: r["ts"], default=None,
         )
-        .collect()
-    }
-    committed = 0
-    for ci in range(n_chunks):
-        if ci in done:
-            continue
-        lo, hi = ci * chunk_span, (ci + 1) * chunk_span
-        chunk = docs.filter((F.col("docid") >= lo) & (F.col("docid") < hi))
-        t0 = time.time()
-        out_chunk = os.path.join(out_dir, "raw", f"chunk={ci}")
-        postings = tokenize_postings(chunk, stem=stem, cap=cap)
-        postings.write.mode("overwrite").parquet(out_chunk)
-        rows = spark.read.parquet(out_chunk).count()
-        _append_lineage(
-            spark,
-            out_dir,
-            {
-                "chunk_id": ci,
-                "stage": "tokenize",
-                "status": "ok",
-                "rows": rows,
-                "wall_ms": int((time.time() - t0) * 1000),
-                "input_fingerprint": fp,
-                "ts": time.time(),
-            },
-        )
-        committed += 1
-        if fail_after_chunk is not None and committed >= fail_after_chunk:
-            docs.unpersist()
-            raise RuntimeError(
-                f"injected failure after {committed} chunk commits"
+        fresh = last and last["input_fingerprint"] == fp
+        if fresh and os.path.isdir(snap_path):
+            since = last["ts"]
+            offsets = docid_offsets(spark, snap_path)
+        else:
+            t0 = time.time()
+            offsets = ranged_snapshot(src, snap_path, parts)
+            n_pages = int(fp.split(":", 1)[0])  # the fingerprint's count
+            since = _append_lineage(
+                spark, out_dir, "snapshot", -1, n_pages, t0, fp
+            )
+        # a chunk row only counts against the snapshot it was cut from
+        done = {
+            r["chunk_id"]
+            for r in lineage
+            if r["stage"] == "tokenize"
+            and r["input_fingerprint"] == fp
+            and r["ts"] >= since
+        }
+        for ci in range(n_chunks):
+            if ci in done:
+                continue
+            t0 = time.time()
+            obs = Observation()
+            pids = range(ci * parts // n_chunks, (ci + 1) * parts // n_chunks)
+            # no range exchange in this plan: the observed count fires once
+            tokenize_postings_from_snapshot(
+                spark, snap_path, offsets, stem=stem, cap=cap, pids=pids
+            ).observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).option("compression", "lz4").parquet(
+                os.path.join(out_dir, "raw", f"chunk={ci}")
+            )
+            _append_lineage(
+                spark, out_dir, "tokenize", ci, obs.get["rows"], t0, fp
             )
 
-    # ---- assembly (deterministic function of the raw chunks) ----
-    # Validate the raw/ directory against THIS run's chunk set first: a
-    # prior run into the same out_dir with different n_chunks (or different
-    # input) can leave chunk=<i> directories that no current lineage row
-    # owns; silently folding them in would corrupt doc/term stats and
-    # postings. In-range chunks are safe (fingerprint-mismatched ones were
-    # just rebuilt with mode=overwrite); anything else is deleted.
-    import re
-    import shutil
-
-    raw_root = os.path.join(out_dir, "raw")
-    if os.path.isdir(raw_root):
+        # Validate the raw/ directory against THIS run's chunk set first:
+        # a prior run into the same out_dir with different n_chunks can
+        # leave chunk=<i> directories that no current lineage row owns;
+        # silently folding them in would corrupt doc/term stats and
+        # postings. In-range chunks are safe (stale ones were just rebuilt
+        # with mode=overwrite); anything else is deleted.
+        raw_root = os.path.join(out_dir, "raw")
         for name in os.listdir(raw_root):
             m = re.fullmatch(r"chunk=(\d+)", name)
             if m is None or int(m.group(1)) >= n_chunks:
                 shutil.rmtree(os.path.join(raw_root, name))
 
-    t0 = time.time()
-    postings = spark.read.parquet(os.path.join(out_dir, "raw"))
-    doc_tbl = (
-        postings.groupBy("docid").agg(F.max("dl").alias("dl"))
-        .join(docs.select("docid", "url"), "docid")
-    )
-    doc_tbl.persist()
-    srow = doc_tbl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(srow["n_docs"]), float(srow["avgdl"] or 0.0)
-    terms = term_stats(postings, n_docs)
-    parts = spark.sparkContext.defaultParallelism
-    blocks = build_blocks_arrow(
-        postings, terms, n_docs, avgdl,
-        postings_per_bucket=postings_per_bucket, block_size=block_size,
-        partitions=parts,
-    )
-    blocks.write.mode("overwrite").parquet(os.path.join(out_dir, "postings"))
-    terms.repartitionByRange(max(1, parts // 4), "term").sortWithinPartitions(
-        "term"
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
-    doc_tbl.repartitionByRange(max(1, parts // 4), "docid").sortWithinPartitions(
-        "docid"
-    ).write.mode("overwrite").parquet(os.path.join(out_dir, "docs"))
-
-    stats = {
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "stem": stem,
-        "cap": cap,
-        "block_size": block_size,
-        "postings_per_bucket": postings_per_bucket,
-        "lang": lang,
-        "n_chunks": n_chunks,
-        "input_fingerprint": fp,
-    }
-    with open(os.path.join(out_dir, "stats.json"), "w") as fh:
-        json.dump(stats, fh, indent=1)
-    _append_lineage(
-        spark,
-        out_dir,
-        {
-            "chunk_id": -1,
-            "stage": "assemble",
-            "status": "ok",
-            "rows": n_docs,
-            "wall_ms": int((time.time() - t0) * 1000),
-            "input_fingerprint": fp,
-            "ts": time.time(),
-        },
-    )
-    doc_tbl.unpersist()
-    docs.unpersist()
+        t0 = time.time()
+        stats = assemble_index(
+            Warehouse(spark, out_dir), spark.read.parquet(raw_root),
+            snap_path, offsets, spark.sparkContext.defaultParallelism,
+            postings_per_bucket, block_size, stem=stem, cap=cap, lang=lang,
+            n_chunks=n_chunks, input_fingerprint=fp,
+        )
+    _append_lineage(spark, out_dir, "assemble", -1, stats["n_docs"], t0, fp)
     return stats
 
 

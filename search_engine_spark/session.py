@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+import search_engine_spark
+
 
 def get_spark(
     app_name: str = "search_engine_spark",
@@ -31,6 +33,14 @@ def get_spark(
     n_shuffle = shuffle_partitions or (
         int(cores_str) * 2 if cores_str.isdigit() else 32
     )
+    # Python workers import the engine from wherever this package lives,
+    # not from the driver's working directory
+    pkg_parent = os.path.dirname(
+        os.path.dirname(os.path.abspath(search_engine_spark.__file__))
+    )
+    worker_path = os.pathsep.join(
+        p for p in (pkg_parent, os.environ.get("PYTHONPATH")) if p
+    )
     builder = (
         SparkSession.builder.master(f"local[{cores_str}]")
         .appName(app_name)
@@ -44,6 +54,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -7,14 +7,13 @@ Structured Streaming so the SAME transformations run incrementally:
 
 * ``stream_pages`` — file-source stream over a pages directory: new
   parquet files (crawl deliveries) are picked up incrementally.
-* ``streaming_postings`` — the indexer's tokenize stage as a streaming
-  transform (mapInPandas works unchanged on streams): each micro-batch
-  appends (docid, term, tf, positions, dl) rows; a downstream batch job
-  folds them into posting blocks (index refresh).
 * ``windowed_event_counts`` — tumbling event-time window aggregation with
   a watermark (late data dropped after the threshold).
 * ``session_windows`` — gap-based session aggregation via the built-in
   ``session_window`` (state stores + watermark eviction).
+
+The streaming index refresh (crawl deliveries folded into a log-structured
+merge tree of index segments) is ``streaming/indexing.py::run_ingest``.
 
 Tests drive these with trigger(availableNow=True) against static parquet
 and assert equality with the batch equivalents — the Structured Streaming
@@ -24,8 +23,6 @@ guarantee being exercised deliberately.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from search_engine_spark.operators.indexer import POSTINGS_SCHEMA, tokenize_postings
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -45,20 +42,6 @@ def stream_pages(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def streaming_postings(
-    pages_stream: DataFrame, lang: str = "en"
-) -> DataFrame:
-    """Tokenize stage over a stream: same pandas UDF as the batch indexer.
-
-    docids are not assignable incrementally as dense ranks; streaming mode
-    keys postings by url hash (xxhash64) — the batch compaction job maps
-    them to dense ids when folding into the main index."""
-    src = pages_stream.filter(F.col("lang") == lang).select(
-        F.xxhash64("url").alias("docid"), "text"
-    )
-    return tokenize_postings(src)
 
 
 def windowed_event_counts(

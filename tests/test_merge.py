@@ -215,3 +215,26 @@ def test_segment_query_shifts_by_docid_space(spark, tmp_path_factory):
     ]
     assert len(want) == 4
     assert got == want
+
+
+def test_merge_resumable_segment_shifts_by_docid_space(spark, tmp_path_factory):
+    """A resumable-built segment records its docid space like a
+    build_index one: without it the merge shifted b by n_docs and two
+    documents were summed into one docid."""
+    from search_engine_spark.plans.checkpoint import resumable_build
+
+    base = tmp_path_factory.mktemp("rspace")
+    a_dir, b_dir, m_dir = str(base / "a"), str(base / "b"), str(base / "m")
+    resumable_build(
+        _pages(spark, [("u0", "alpha beta"), ("u1", "..."),  # token-less!
+                       ("u2", "alpha gamma")]),
+        a_dir, n_chunks=2, stem=False,
+    )
+    build_index(
+        _pages(spark, [("v0", "delta epsilon"), ("v1", "beta delta")]),
+        b_dir, stem=False, partitions=2,
+    )
+    merge_indexes(spark, a_dir, b_dir, m_dir)
+    got = Q.topk_wand(Q.load_index(spark, m_dir), "alpha delta", k=10)
+    assert sorted(d for d, _s in got) == [0, 2, 3, 4]
+    assert {round(s, 6) for _d, s in got} == {round(got[0][1], 6)}

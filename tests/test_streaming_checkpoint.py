@@ -20,7 +20,6 @@ from search_engine_spark.streaming.windows import (
     session_windows,
     stream_pages,
     streaming_first_seen,
-    streaming_postings,
     windowed_event_counts,
 )
 
@@ -72,21 +71,6 @@ def test_session_windows_stream_equals_batch(spark, events, tmp_path):
     assert got == want and len(want) > 10
 
 
-def test_streaming_postings_ingest(spark, tmp_path):
-    src = str(tmp_path / "pages")
-    gen_pages_df(spark, 60, partitions=2).write.parquet(src)
-    stream = stream_pages(spark, src, max_files_per_trigger=1)
-    run_stream_to_memory(streaming_postings(stream), "post_stream")
-    got = spark.table("post_stream")
-    n_docs = got.select("docid").distinct().count()
-    want_docs = (
-        spark.read.parquet(src).filter("lang = 'en'").count()
-    )
-    assert n_docs == want_docs
-    # tf payload matches the batch tokenizer on a spot-checked doc
-    assert got.filter(F.col("tf") <= 0).count() == 0
-
-
 def test_streaming_first_seen_dedup(spark, tmp_path):
     """Custom stateful operator (applyInPandasWithState): only the first
     occurrence of each content hash is emitted, across micro-batches."""
@@ -131,16 +115,30 @@ def test_streaming_first_seen_dedup(spark, tmp_path):
         assert d in groups[h]
 
 
-def test_resumable_build_resumes_and_matches(spark, tmp_path):
+def test_resumable_build_resumes_and_matches(spark, tmp_path, monkeypatch):
     """Crash after 2 chunk commits → resume → final index identical to a
     single-shot build (term stats + query results)."""
+    from search_engine_spark.plans import checkpoint
+
     pages = gen_pages_df(spark, 120, partitions=4)
     direct = str(tmp_path / "direct")
     build_index(pages, direct, lang="en", partitions=4)
 
     resum = str(tmp_path / "resum")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        resumable_build(pages, resum, n_chunks=4, fail_after_chunk=2)
+    append = checkpoint._append_lineage
+    committed = []
+
+    def crash_after_two(spark, out_dir, stage, *args):
+        ts = append(spark, out_dir, stage, *args)
+        committed.append(stage)
+        if committed.count("tokenize") == 2:
+            raise RuntimeError("injected failure after 2 chunk commits")
+        return ts
+
+    with monkeypatch.context() as mp:
+        mp.setattr(checkpoint, "_append_lineage", crash_after_two)
+        with pytest.raises(RuntimeError, match="injected failure"):
+            resumable_build(pages, resum, n_chunks=4)
     lin1 = read_lineage(spark, resum)
     assert lin1.filter("stage = 'tokenize' AND status = 'ok'").count() == 2
 
@@ -184,6 +182,32 @@ def test_resumable_build_drops_stale_chunks(spark, tmp_path):
     assert ta == tb
     for q in ("gentlemen", "prince andrew"):
         assert Q.topk_wand(a, q, k=20) == Q.topk_wand(b, q, k=20)
+
+
+def test_resumable_build_snapshot_lives_under_out_dir(spark, tmp_path):
+    """The ranged snapshot is the build's own stage under out_dir/_stage
+    (shared storage on a cluster), not a driver-local temp dir that
+    outlives the build."""
+    import glob
+    import tempfile
+
+    pattern = os.path.join(tempfile.gettempdir(), "se_docids_*")
+    before = set(glob.glob(pattern))
+    out = str(tmp_path / "idx")
+    resumable_build(gen_pages_df(spark, 40, partitions=2), out, n_chunks=2)
+    assert set(glob.glob(pattern)) - before == set()
+    assert os.path.isdir(os.path.join(out, "_stage", "ranged_snapshot"))
+
+
+def test_resumable_build_reruns_chunks_for_new_tokenizer(spark, tmp_path):
+    """Chunks tokenized with other settings are not reused: a re-run with
+    stem=False re-tokenizes every chunk instead of assembling stemmed
+    postings into an unstemmed index."""
+    pages = gen_pages_df(spark, 40, partitions=2)
+    out = str(tmp_path / "idx")
+    resumable_build(pages, out, n_chunks=2)
+    resumable_build(pages, out, n_chunks=2, stem=False)
+    assert read_lineage(spark, out).filter("stage = 'tokenize'").count() == 4
 
 
 # --- log-structured streaming incremental indexing --------------------------
