@@ -28,8 +28,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from search_engine_spark.oracle.bm25 import bm25_term_score
-
 DEFAULT_BLOCK_SIZE = 128
 
 
@@ -257,59 +255,6 @@ def decode_block_np(
         np.concatenate(chunks) if chunks else np.empty(0, dtype=np.int64)
     )
     return docids, tfs, dls, pos_lens, pos_flat
-
-
-def decode_block_docids(buf: bytes) -> list[int]:
-    """Docids only (skip tfs/positions decode for intersection-only paths)."""
-    off = 0
-    n, off = varint_decode(buf, off)
-    if n == 0:
-        return []
-    d, off = varint_decode(buf, off)
-    docids = [d]
-    for _ in range(n - 1):
-        gap, off = varint_decode(buf, off)
-        d += gap
-        docids.append(d)
-    return docids
-
-
-def split_blocks(
-    docids: list[int],
-    tfs: list[int],
-    positions: list[list[int]] | None,
-    doclen: dict[int, int] | None,
-    avgdl: float,
-    idf: float,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-):
-    """Split a full (sorted) posting list into encoded blocks.
-
-    Yields (block_id, block_bytes, block_max, first_docid, last_docid, n)
-    where block_max is the max exact BM25 partial score inside the block
-    (requires doclen+avgdl+idf; 0.0 when doclen is None).
-    """
-    for bi, start in enumerate(range(0, len(docids), block_size)):
-        end = min(start + block_size, len(docids))
-        b_doc = docids[start:end]
-        b_tf = tfs[start:end]
-        b_pos = positions[start:end] if positions is not None else None
-        b_dl = [doclen[d] for d in b_doc] if doclen is not None else None
-        if doclen is not None:
-            bmax = max(
-                bm25_term_score(b_tf[i], doclen[b_doc[i]], avgdl, idf)
-                for i in range(len(b_doc))
-            )
-        else:
-            bmax = 0.0
-        yield (
-            bi,
-            encode_block(b_doc, b_tf, b_pos, b_dl),
-            bmax,
-            b_doc[0],
-            b_doc[-1],
-            len(b_doc),
-        )
 
 
 _B1 = [bytes((1, p)) for p in range(128)]  # n=1, first<128: 2 bytes, interned

@@ -18,11 +18,14 @@ plan:
 Scale design notes (the parts that must survive 10^12 docs):
 
 * **Docid assignment** is a two-pass distributed dense rank over url
-  (range-partition by url → per-partition counts → driver prefix-sum of P
-  integers → per-partition offset + local rank). No global window, no
-  driver-side scan — the reference's sequential global counter
-  (IndexerProject.java:210-235) is the anti-pattern this replaces. The
-  only driver state is one count per partition.
+  (range-partition by url and sort → the snapshot stores each row's
+  partition ``_pid`` and ordinal ``_ord`` → per-partition counts → driver
+  prefix-sum of P integers → docid = offset[_pid] + _ord, a JVM
+  expression). No global window, no driver-side scan, no Python — the
+  reference's sequential global counter (IndexerProject.java:210-235) is
+  the anti-pattern this replaces. The only driver state is one count per
+  partition, and since the rank is stored data, the snapshot reads back
+  in splits of any size.
 * **Skew**: stop-word-head terms have posting lists ~N long; a naive
   groupBy(term) would put an entire such list in one task. Terms whose df
   exceeds ``postings_per_bucket`` are split into docid-RANGE buckets
@@ -48,10 +51,8 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Iterator
-from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from search_engine_spark.catalog import Warehouse
 from search_engine_spark.functions.codec import DEFAULT_BLOCK_SIZE
@@ -82,10 +83,16 @@ BLOCKS_SCHEMA = (
 
 def ranged_snapshot(
     src: DataFrame, snap_path: str, parts: int, from_html: bool = False
-) -> dict[int, int]:
-    """Write ``src`` range-partitioned and sorted by url, tagged with
-    ``_pid``, to ``snap_path``; return the per-partition docid offsets
-    (docid = offset[_pid] + ordinal in the partition, see module doc).
+) -> tuple[dict[int, int], int]:
+    """Write ``src`` range-partitioned and sorted by url to ``snap_path``,
+    each row tagged with its partition ``_pid`` and its ordinal ``_ord``
+    within that partition; return the per-partition docid offsets and the
+    docid space (see :func:`docid_offsets`).
+
+    ``_ord`` is the low 33 bits of ``monotonically_increasing_id()`` (the
+    row number within the task) taken after the sort, so the url rank is
+    stored data: no window, no extra exchange, and reading the snapshot
+    back in any number of splits cannot change a docid.
 
     The write pins ONE sampling of the range boundaries:
     ``repartitionByRange`` re-samples per action, so an unmaterialized
@@ -97,6 +104,9 @@ def ranged_snapshot(
         .repartitionByRange(parts, "url")
         .sortWithinPartitions("url")
         .withColumn("_pid", F.spark_partition_id())
+        .withColumn(
+            "_ord", F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        )
         .write.mode("overwrite")
         .option("compression", "lz4")
         .parquet(snap_path)
@@ -104,8 +114,10 @@ def ranged_snapshot(
     return docid_offsets(src.sparkSession, snap_path)
 
 
-def docid_offsets(spark, snap_path: str) -> dict[int, int]:
-    """Per-partition docid offsets from the materialized ranged snapshot."""
+def docid_offsets(spark, snap_path: str) -> tuple[dict[int, int], int]:
+    """Per-partition docid offsets from the materialized ranged snapshot,
+    and the docid space: the snapshot's row count (every page gets a docid,
+    including token-less ones that never reach postings or docs)."""
     snap = spark.read.parquet(snap_path)
     counts = {
         r["_pid"]: r["cnt"]
@@ -116,85 +128,16 @@ def docid_offsets(spark, snap_path: str) -> dict[int, int]:
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    return offsets
+    return offsets, acc
 
 
-@contextmanager
-def whole_snapshot_files(spark: SparkSession) -> Iterator[None]:
-    """Docid assignment (``_RunningIds``) requires each snapshot FILE to
-    be read whole by one task; Spark splits files larger than
-    maxPartitionBytes (default 128 MB) across tasks, which would give each
-    half its own counter starting at offset+0 → duplicate docids. Pin the
-    split size above any realistic snapshot file for the duration of a
-    build and restore afterwards."""
-    conf = spark.conf
-    saved_mpb = conf.get("spark.sql.files.maxPartitionBytes", None)
-    conf.set("spark.sql.files.maxPartitionBytes", str(1 << 40))
-    try:
-        yield
-    finally:
-        if saved_mpb is None:
-            conf.unset("spark.sql.files.maxPartitionBytes")
-        else:
-            conf.set("spark.sql.files.maxPartitionBytes", saved_mpb)
-
-
-class _RunningIds:
-    """Streaming docid assignment over batches of the ranged snapshot.
-
-    Rows of one ``_pid`` arrive as ONE contiguous run per task (parquet
-    preserves in-file row order; snapshot files are written one per
-    partition and read whole). docid = offset[pid] + ordinal within the
-    run. The closed-set assertion catches WITHIN-task non-contiguity
-    (interleaved pids). It cannot see a snapshot file split ACROSS tasks
-    (both halves would restart the pid's counter at offset+0 in separate
-    workers) — that failure is caught by the global count/distinct/max
-    docid invariant checked in ``assemble_index``.
-    """
-
-    def __init__(self, offsets: dict[int, int]):
-        self.offsets = offsets
-        self.counters: dict[int, int] = {}
-        self.closed: set[int] = set()
-        self.current: int | None = None
-
-    def assign(self, pids) -> "list[int]":
-        out = []
-        for pid in pids:
-            pid = int(pid)
-            if pid != self.current:
-                if self.current is not None:
-                    self.closed.add(self.current)
-                if pid in self.closed:
-                    raise RuntimeError(
-                        f"snapshot partition {pid} arrived non-contiguously; "
-                        "docid assignment would be wrong (file split?)"
-                    )
-                self.current = pid
-                self.counters.setdefault(pid, 0)
-            base = self.offsets[pid]
-            out.append(base + self.counters[pid])
-            self.counters[pid] += 1
-        return out
-
-
-def docid_url_table(spark, snap_path: str, offsets: dict[int, int]) -> DataFrame:
-    """(docid, url) from the snapshot — column-pruned read, no shuffle."""
-    import pyarrow as pa
-
-    snap = spark.read.parquet(snap_path).select("url", "_pid")
-    b_off = spark.sparkContext.broadcast(offsets)
-
-    def run(batches):
-        ids = _RunningIds(b_off.value)
-        for batch in batches:
-            urls = batch.column(0)
-            docids = ids.assign(batch.column(1).to_pylist())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(docids, pa.int64()), urls], names=["docid", "url"]
-            )
-
-    return snap.mapInArrow(run, schema="docid long, url string")
+def docid_col(offsets: dict[int, int]) -> Column:
+    """docid = offset[_pid] + _ord over a ranged-snapshot read: the url's
+    rank, computed in the JVM."""
+    offset = F.create_map(
+        *[F.lit(x) for kv in offsets.items() for x in kv]
+    ).cast("map<int,bigint>")
+    return (offset[F.col("_pid")] + F.col("_ord")).alias("docid")
 
 
 # ---------------------------------------------------------------------------
@@ -210,9 +153,10 @@ def tokenize_postings_from_snapshot(
     from_html: bool = False,
     pids: range | None = None,
 ) -> DataFrame:
-    """Stream the ranged snapshot, assign docids on the fly (no window, no
-    extra shuffle of the text) and tokenize: one row per (docid, distinct
-    term) with tf, varint positions and the doc length ``dl``.
+    """Stream the ranged snapshot with its docids (:func:`docid_col`; no
+    window, no extra shuffle of the text) and tokenize: one row per
+    (docid, distinct term) with tf, varint positions and the doc length
+    ``dl``.
     ``from_html`` runs the pinned HTML→text extraction first (the full
     Common-Crawl pipeline; reference IndexerProject.java:262-276).
     ``pids`` keeps only that range of snapshot partitions (a resumable
@@ -223,14 +167,13 @@ def tokenize_postings_from_snapshot(
     from search_engine_spark.functions.codec import encode_positions
     from search_engine_spark.oracle.text import extract_text
 
-    content_col = "html" if from_html else "text"
-    # column-pruned: urls are NOT read here (docid_url_table has its own
-    # pruned pass) — the content column dominates this scan, don't pay a
-    # second full url decode on the biggest read of the build
-    snap = spark.read.parquet(snap_path).select(content_col, "_pid")
+    # column-pruned: urls are NOT read here (the (docid, url) map has its
+    # own pruned read) — the content column dominates this scan, don't pay
+    # a second full url decode on the biggest read of the build
+    snap = spark.read.parquet(snap_path)
     if pids is not None:
         snap = snap.filter(F.col("_pid").between(pids.start, pids.stop - 1))
-    b_off = spark.sparkContext.broadcast(offsets)
+    snap = snap.select("html" if from_html else "text", docid_col(offsets))
     kw = {} if cap is None else {"cap": cap}
 
     out_schema = pa.schema(
@@ -244,7 +187,6 @@ def tokenize_postings_from_snapshot(
     )
 
     def run(batches):
-        ids = _RunningIds(b_off.value)
         o_docid: list[int] = []
         o_term: list[str] = []
         o_tf: list[int] = []
@@ -268,7 +210,7 @@ def tokenize_postings_from_snapshot(
 
         for batch in batches:
             texts_in = batch.column(0).to_pylist()
-            docids_in = ids.assign(batch.column(1).to_pylist())
+            docids_in = batch.column(1).to_pylist()
             for did, txt in zip(docids_in, texts_in):
                 if from_html:
                     txt = extract_text(txt or b"")
@@ -497,40 +439,43 @@ def build_index(
     src = pages.filter(F.col("lang") == lang) if lang else pages
     snap_path = os.path.join(out_dir, "_stage", "ranged_snapshot")
     raw_path = os.path.join(out_dir, "_stage", "postings_raw")
-    with whole_snapshot_files(spark):
-        # stage 1: materialize the url-range-partitioned, sorted snapshot
-        offsets = ranged_snapshot(src, snap_path, parts, from_html)
-        # stage 2 (fused with docid assignment — no window, no extra
-        # shuffle of the text): materialize the tokenized postings ONCE as
-        # a scratch parquet table (the natural checkpoint boundary):
-        # columnar caching of 10^7+ rows does not scale with cores, a lz4
-        # parquet roundtrip does — and every downstream consumer (doc
-        # stats, term stats, block build) reads the same snapshot.
-        tokenize_postings_from_snapshot(
-            spark, snap_path, offsets, stem=stem, cap=cap, from_html=from_html
-        ).write.mode("overwrite").option("compression", "lz4").parquet(raw_path)
-        # table commits go through the Warehouse abstraction: Iceberg
-        # snapshot commits when a catalog is configured, identical parquet
-        # layout here
-        return assemble_index(
-            Warehouse(spark, out_dir, versioned=versioned),
-            spark.read.parquet(raw_path), snap_path, offsets, parts,
-            postings_per_bucket, block_size, stem=stem, cap=cap, lang=lang,
-        )
+    # stage 1: materialize the url-range-partitioned, sorted snapshot
+    offsets, docid_space = ranged_snapshot(src, snap_path, parts, from_html)
+    # stage 2 (docids read straight off the snapshot — no window, no extra
+    # shuffle of the text): materialize the tokenized postings ONCE as a
+    # scratch parquet table (the natural checkpoint boundary): columnar
+    # caching of 10^7+ rows does not scale with cores, a lz4 parquet
+    # roundtrip does — and every downstream consumer (doc stats, term
+    # stats, block build) reads the same snapshot.
+    tokenize_postings_from_snapshot(
+        spark, snap_path, offsets, stem=stem, cap=cap, from_html=from_html
+    ).write.mode("overwrite").option("compression", "lz4").parquet(raw_path)
+    # table commits go through the Warehouse abstraction: Iceberg snapshot
+    # commits when a catalog is configured, identical parquet layout here
+    return assemble_index(
+        Warehouse(spark, out_dir, versioned=versioned),
+        spark.read.parquet(raw_path), snap_path, offsets, docid_space, parts,
+        postings_per_bucket, block_size, stem=stem, cap=cap, lang=lang,
+    )
 
 
 def assemble_index(
     wh: Warehouse, postings: DataFrame, snap_path: str,
-    offsets: dict[int, int], parts: int, postings_per_bucket: int,
-    block_size: int, **meta,
+    offsets: dict[int, int], docid_space: int, parts: int,
+    postings_per_bucket: int, block_size: int, **meta,
 ) -> dict:
     """Stages 3–4 of every build: tokenized ``postings`` + the ranged
     snapshot → docs/terms/postings tables committed through ``wh`` and
-    ``stats.json`` (``meta`` is recorded there too); returns the stats."""
+    ``stats.json`` (``meta`` is recorded there too); returns the stats.
+
+    ``docid_space`` is the number of docids assigned. Token-less pages
+    consume a docid but never reach postings/docs (n_docs excludes them),
+    so the space can exceed n_docs — merge shifts must use the space, not
+    n_docs, or shifted b-side ids collide with a-side ids."""
     spark = wh.spark
     # doc table + global stats; dl is carried on posting rows — one
     # max-aggregation against the column-pruned (docid, url) map.
-    id_map = docid_url_table(spark, snap_path, offsets)
+    id_map = spark.read.parquet(snap_path).select(docid_col(offsets), "url")
     doc_tbl = postings.groupBy("docid").agg(F.max("dl").alias("dl")).join(
         id_map, "docid"
     )
@@ -548,28 +493,6 @@ def assemble_index(
     ).collect()[0]
     n_docs = int(stats_row["n_docs"])
     avgdl = float(stats_row["avgdl"] or 0.0)
-
-    # GLOBAL docid backstop + docid-space size. Token-less pages consume a
-    # docid but never reach postings/docs (n_docs excludes them), so the
-    # assigned ID SPACE can exceed n_docs — merge shifts must use the
-    # space, not n_docs, or shifted b-side ids collide with a-side ids.
-    # The same aggregate is the REAL loud backstop for split snapshot
-    # files: per-task _RunningIds cannot see a duplicate produced by
-    # another task, but a global count/distinct/max mismatch can.
-    idrow = id_map.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("docid").alias("nd"),
-        F.max("docid").alias("mx"),
-    ).collect()[0]
-    docid_space = int(idrow["n"])
-    if idrow["nd"] != docid_space or (
-        docid_space and idrow["mx"] + 1 != docid_space
-    ):
-        raise RuntimeError(
-            f"docid assignment corrupt: {docid_space} rows, "
-            f"{idrow['nd']} distinct ids, max {idrow['mx']} "
-            "(snapshot file split across tasks?)"
-        )
 
     terms = term_stats(postings, n_docs)
     wh.write(

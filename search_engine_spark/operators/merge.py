@@ -85,6 +85,14 @@ def merge_indexes(
         sa = json.load(fh)
     with open(os.path.join(b_dir, "stats.json")) as fh:
         sb = json.load(fh)
+    # one term space: a stemmed and an unstemmed segment (or two position
+    # caps) would answer the same query term from different postings
+    for key in ("stem", "cap"):
+        if sa.get(key) != sb.get(key):
+            raise ValueError(
+                f"cannot merge indexes built with different {key}: "
+                f"{sa.get(key)!r} vs {sb.get(key)!r}"
+            )
     # docid_space falls back to n_docs for pre-space indexes (equal unless
     # the corpus contained token-less pages)
     shift = sa.get("docid_space", sa["n_docs"])

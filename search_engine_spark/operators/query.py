@@ -177,10 +177,16 @@ def _bm25_scores(
     )
 
 
+def _check_k(k: int) -> None:
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
+
+
 def _top_k(scored: DataFrame, k: int, per: str | None = None) -> DataFrame:
     """The k best rows by (score desc, docid asc): one global
     ORDER BY ... LIMIT (TakeOrderedAndProject), or, with ``per``, the k
     best of each ``per`` group with their 1-based ``rank``."""
+    _check_k(k)
     order = (F.col("score").desc(), F.col("docid").asc())
     if per is None:
         return scored.orderBy(*order).limit(k)
@@ -589,8 +595,9 @@ def topk_wand(
     :data:`DRIVER_POSTINGS_MAX` the block bytes are NEVER collected — the
     call hands off to ``topk_distributed`` and returns its (rank- and
     score-identical) result. The preflight costs zero extra Spark jobs."""
+    _check_k(k)
     terms = parse_query(query, stem=index.stats.get("stem", True))
-    if not terms:
+    if not terms or k == 0:
         return []
     avgdl = index.stats["avgdl"]
     trows = (

@@ -7,7 +7,8 @@ here ``build_index``'s own stages (operators/indexer.py) run chunked and
 each commits independently:
 
     out_dir/
-      _stage/ranged_snapshot/ the build's url-range snapshot (stage 1)
+      _stage/ranged_snapshot/ the build's url-range snapshot (stage 1);
+                              its _pid/_ord columns fix every docid
       raw/chunk=<i>/          tokenized postings of chunk i: a contiguous
                               range of snapshot partitions (``_pid``)
       lineage/                one parquet row per committed stage —
@@ -48,7 +49,6 @@ from search_engine_spark.operators.indexer import (
     docid_offsets,
     ranged_snapshot,
     tokenize_postings_from_snapshot,
-    whole_snapshot_files,
 )
 
 LINEAGE_SCHEMA = (
@@ -111,72 +111,77 @@ def resumable_build(
     parts = n_chunks * spark.sparkContext.defaultParallelism
     # the fingerprint covers the chunk LAYOUT and the tokenizer settings
     # too: a lineage row from a run with a different layout describes
-    # different partitions and must not mark this run's chunks as done
-    fp = f"{corpus_fingerprint(src)}:c{n_chunks}:p{parts}:s{int(stem)}:k{cap}"
+    # different partitions and must not mark this run's chunks as done.
+    # "ord": the snapshot carries the _ord column (older ones lack it and
+    # must be re-snapshotted, not reused)
+    fp = (
+        f"{corpus_fingerprint(src)}:c{n_chunks}:p{parts}"
+        f":s{int(stem)}:k{cap}:ord"
+    )
     lineage = read_lineage(spark, out_dir).filter("status = 'ok'").collect()
     snap_path = os.path.join(out_dir, "_stage", "ranged_snapshot")
 
-    with whole_snapshot_files(spark):
-        last = max(
-            (r for r in lineage if r["stage"] == "snapshot"),
-            key=lambda r: r["ts"], default=None,
-        )
-        fresh = last and last["input_fingerprint"] == fp
-        if fresh and os.path.isdir(snap_path):
-            since = last["ts"]
-            offsets = docid_offsets(spark, snap_path)
-        else:
-            t0 = time.time()
-            offsets = ranged_snapshot(src, snap_path, parts)
-            n_pages = int(fp.split(":", 1)[0])  # the fingerprint's count
-            since = _append_lineage(
-                spark, out_dir, "snapshot", -1, n_pages, t0, fp
-            )
-        # a chunk row only counts against the snapshot it was cut from
-        done = {
-            r["chunk_id"]
-            for r in lineage
-            if r["stage"] == "tokenize"
-            and r["input_fingerprint"] == fp
-            and r["ts"] >= since
-        }
-        for ci in range(n_chunks):
-            if ci in done:
-                continue
-            t0 = time.time()
-            obs = Observation()
-            pids = range(ci * parts // n_chunks, (ci + 1) * parts // n_chunks)
-            # no range exchange in this plan: the observed count fires once
-            tokenize_postings_from_snapshot(
-                spark, snap_path, offsets, stem=stem, cap=cap, pids=pids
-            ).observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                "overwrite"
-            ).option("compression", "lz4").parquet(
-                os.path.join(out_dir, "raw", f"chunk={ci}")
-            )
-            _append_lineage(
-                spark, out_dir, "tokenize", ci, obs.get["rows"], t0, fp
-            )
-
-        # Validate the raw/ directory against THIS run's chunk set first:
-        # a prior run into the same out_dir with different n_chunks can
-        # leave chunk=<i> directories that no current lineage row owns;
-        # silently folding them in would corrupt doc/term stats and
-        # postings. In-range chunks are safe (stale ones were just rebuilt
-        # with mode=overwrite); anything else is deleted.
-        raw_root = os.path.join(out_dir, "raw")
-        for name in os.listdir(raw_root):
-            m = re.fullmatch(r"chunk=(\d+)", name)
-            if m is None or int(m.group(1)) >= n_chunks:
-                shutil.rmtree(os.path.join(raw_root, name))
-
+    last = max(
+        (r for r in lineage if r["stage"] == "snapshot"),
+        key=lambda r: r["ts"], default=None,
+    )
+    fresh = last and last["input_fingerprint"] == fp
+    if fresh and os.path.isdir(snap_path):
+        since = last["ts"]
+        offsets, docid_space = docid_offsets(spark, snap_path)
+    else:
         t0 = time.time()
-        stats = assemble_index(
-            Warehouse(spark, out_dir), spark.read.parquet(raw_root),
-            snap_path, offsets, spark.sparkContext.defaultParallelism,
-            postings_per_bucket, block_size, stem=stem, cap=cap, lang=lang,
-            n_chunks=n_chunks, input_fingerprint=fp,
+        offsets, docid_space = ranged_snapshot(src, snap_path, parts)
+        n_pages = int(fp.split(":", 1)[0])  # the fingerprint's count
+        since = _append_lineage(
+            spark, out_dir, "snapshot", -1, n_pages, t0, fp
         )
+    # a chunk row only counts against the snapshot it was cut from
+    done = {
+        r["chunk_id"]
+        for r in lineage
+        if r["stage"] == "tokenize"
+        and r["input_fingerprint"] == fp
+        and r["ts"] >= since
+    }
+    for ci in range(n_chunks):
+        if ci in done:
+            continue
+        t0 = time.time()
+        obs = Observation()
+        pids = range(ci * parts // n_chunks, (ci + 1) * parts // n_chunks)
+        # no range exchange in this plan: the observed count fires once
+        tokenize_postings_from_snapshot(
+            spark, snap_path, offsets, stem=stem, cap=cap, pids=pids
+        ).observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).option("compression", "lz4").parquet(
+            os.path.join(out_dir, "raw", f"chunk={ci}")
+        )
+        _append_lineage(
+            spark, out_dir, "tokenize", ci, obs.get["rows"], t0, fp
+        )
+
+    # Validate the raw/ directory against THIS run's chunk set first:
+    # a prior run into the same out_dir with different n_chunks can
+    # leave chunk=<i> directories that no current lineage row owns;
+    # silently folding them in would corrupt doc/term stats and
+    # postings. In-range chunks are safe (stale ones were just rebuilt
+    # with mode=overwrite); anything else is deleted.
+    raw_root = os.path.join(out_dir, "raw")
+    for name in os.listdir(raw_root):
+        m = re.fullmatch(r"chunk=(\d+)", name)
+        if m is None or int(m.group(1)) >= n_chunks:
+            shutil.rmtree(os.path.join(raw_root, name))
+
+    t0 = time.time()
+    stats = assemble_index(
+        Warehouse(spark, out_dir), spark.read.parquet(raw_root),
+        snap_path, offsets, docid_space,
+        spark.sparkContext.defaultParallelism, postings_per_bucket,
+        block_size, stem=stem, cap=cap, lang=lang, n_chunks=n_chunks,
+        input_fingerprint=fp,
+    )
     _append_lineage(spark, out_dir, "assemble", -1, stats["n_docs"], t0, fp)
     return stats
 

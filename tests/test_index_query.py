@@ -392,6 +392,99 @@ def test_reused_segment_handles_job_budget(spark, index):
     assert n_jobs <= 5
 
 
+_TOPK_ENTRY_POINTS = {
+    "topk_wand": lambda ix, q, k: Q.topk_wand(ix, q, k=k),
+    "topk_distributed": lambda ix, q, k: Q.topk_distributed(ix, q, k=k).collect(),
+    "topk_batch": lambda ix, q, k: Q.topk_batch(ix, {0: q}, k=k).collect(),
+    "topk_with_deletes": lambda ix, q, k: Q.topk_with_deletes(
+        ix, ix.spark.createDataFrame([], "docid long"), q, k=k
+    ).collect(),
+    "topk_over_segments": lambda ix, q, k: Q.topk_over_segments(
+        ix.spark, [ix], q, k=k
+    ).collect(),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_TOPK_ENTRY_POINTS))
+def test_topk_rejects_negative_k(index, entry):
+    """k < 0 is the same ValueError on every top-k entry point; k = 0
+    returns no hits."""
+    run = _TOPK_ENTRY_POINTS[entry]
+    q = "gentlemen"
+    assert len(run(index, q, 3)) == 3
+    assert run(index, q, 0) == []
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        run(index, q, -1)
+
+
+def test_build_job_budget(spark, tmp_path_factory):
+    """Docids are a JVM expression over stored snapshot columns: a build
+    runs no separate docid pass and no global docid check job."""
+    pages = gen_pages_df(spark, 1000, partitions=4)
+    out = str(tmp_path_factory.mktemp("budget") / "main")
+    stats, n_jobs = _spark_jobs(
+        spark, lambda: build_index(pages, out, partitions=4)
+    )
+    assert stats["n_docs"] > 0
+    assert n_jobs <= 25
+
+
+def test_docids_survive_split_snapshot_files(
+    spark, tmp_path_factory, corpus, oracle, monkeypatch
+):
+    """A session that reads the ranged snapshot in 32 KiB splits, with
+    several row groups per file, still gets docid = url rank; the build
+    reads the session's split size as it finds it and leaves it alone."""
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.operators import indexer
+
+    split_key = "spark.sql.files.maxPartitionBytes"
+    seen = []
+    real_assemble = indexer.assemble_index
+
+    def spy(*a, **kw):
+        seen.append(spark.conf.get(split_key))
+        return real_assemble(*a, **kw)
+
+    monkeypatch.setattr(indexer, "assemble_index", spy)
+    out = str(tmp_path_factory.mktemp("split") / "main")
+    # small row groups: a split can only start at a row-group boundary
+    conf = {split_key: "32k", "parquet.block.size": "16384",
+            "parquet.page.size.row.check.min": "10",
+            "parquet.page.size.row.check.max": "10"}
+    saved = {key: spark.conf.get(key, None) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    try:
+        stats = build_index(gen_pages_df(spark, N_DOCS, partitions=4), out,
+                            lang="en", stem=True, partitions=4)
+        after = spark.conf.get(split_key)
+        snap = spark.read.parquet(f"{out}/_stage/ranged_snapshot")
+        files = snap.inputFiles()
+        n_splits = snap.rdd.getNumPartitions()
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+    assert seen == ["32k"] and after == "32k"
+    n_groups = sum(pq.ParquetFile(f[len("file:"):]).num_row_groups
+                   for f in files)
+    assert n_groups > len(files) and n_splits > len(files)
+    en_urls = sorted(
+        r["url"] for r in map(page_record, range(N_DOCS)) if r["lang"] == "en"
+    )
+    assert stats["docid_space"] == len(en_urls) == len(corpus)
+    idx = Q.load_index(spark, out)
+    docs = {r["docid"]: r["url"] for r in idx.docs.collect()}
+    assert docs == {d: en_urls[d] for d in oracle.doclen}
+    q = "demosthenes prince andrew"
+    got, want = Q.topk_wand(idx, q, k=10), oracle.topk(q, k=10)
+    assert [d for d, _ in got] == [d for d, _ in want]
+
+
 def test_topk_with_urls_stopword_stem_query(spark, index):
     """Query 'was': every raw token is a stopword but the dual-indexed
     stem 'wa' scores — snippet term list is then EMPTY and snippet_expr

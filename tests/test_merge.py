@@ -238,3 +238,30 @@ def test_merge_resumable_segment_shifts_by_docid_space(spark, tmp_path_factory):
     got = Q.topk_wand(Q.load_index(spark, m_dir), "alpha delta", k=10)
     assert sorted(d for d, _s in got) == [0, 2, 3, 4]
     assert {round(s, 6) for _d, s in got} == {round(got[0][1], 6)}
+
+
+@pytest.mark.parametrize(
+    "opts_a, opts_b",
+    [({"stem": True}, {"stem": False}), ({"cap": None}, {"cap": 2})],
+    ids=["stem", "cap"],
+)
+def test_merge_rejects_different_tokenizer_settings(
+    spark, tmp_path_factory, opts_a, opts_b
+):
+    """Segments tokenized differently hold different term spaces (the
+    unstemmed side never indexed 'run' for 'running'), so no merged stats
+    can describe both: the merge must refuse."""
+    base = tmp_path_factory.mktemp("tokmix")
+    a_dir, b_dir, m_dir = str(base / "a"), str(base / "b"), str(base / "m")
+    build_index(
+        _pages(spark, [("a0", "running fast runs"), ("a1", "walking slowly"),
+                       ("a2", "run home")]),
+        a_dir, partitions=2, **opts_a,
+    )
+    build_index(
+        _pages(spark, [("b0", "running late"), ("b1", "runs daily run")]),
+        b_dir, partitions=2, **opts_b,
+    )
+    key = next(iter(opts_a))
+    with pytest.raises(ValueError, match=f"different {key}"):
+        merge_indexes(spark, a_dir, b_dir, m_dir)

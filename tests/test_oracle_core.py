@@ -7,9 +7,7 @@ import pytest
 
 from search_engine_spark.functions.codec import (
     decode_block,
-    decode_block_docids,
     encode_block,
-    split_blocks,
     varint_decode,
     varint_encode,
 )
@@ -116,31 +114,11 @@ def test_block_roundtrip():
     poss = [[1], [2, 9, 40], [], [7, 8], [1500]]
     blk = encode_block(docids, tfs, poss, dls)
     assert decode_block(blk) == (docids, tfs, dls, poss)
-    assert decode_block_docids(blk) == docids
 
 
 def test_block_rejects_unsorted():
     with pytest.raises(ValueError):
         encode_block([5, 5], [1, 1], None)
-
-
-def test_split_blocks_and_blockmax():
-    docids = list(range(0, 1000, 3))
-    tfs = [(d % 7) + 1 for d in docids]
-    doclen = {d: 100 + (d % 50) for d in docids}
-    blocks = list(
-        split_blocks(docids, tfs, None, doclen, 120.0, 1.5, block_size=128)
-    )
-    assert sum(b[5] for b in blocks) == len(docids)
-    # reassemble
-    got = []
-    for _bi, blk, bmax, first, last, _n in blocks:
-        ds, ts, dls, _ps = decode_block(blk)
-        assert ds[0] == first and ds[-1] == last
-        assert dls == [doclen[d] for d in ds]  # dl colocated in the block
-        assert bmax > 0.0
-        got.extend(ds)
-    assert got == docids
 
 
 def test_oracle_bm25_basic():

@@ -14,6 +14,10 @@ Default comparison: 1 executor × 4 cores  vs  4 executors × 4 cores
 (both within physical cores). Each run is a fresh subprocess; input parquet
 generated once and shared; timing excludes session startup and input gen.
 
+It refuses to run (non-zero exit, with the reason) on a host that cannot
+show scaling: fewer cores than the 4-executor leg needs, or a 1-minute
+load average above half the cores.
+
 Usage: python tools/bench_scaling.py [n_docs] [--update-md]
 """
 
@@ -105,7 +109,30 @@ def run_at(n_exec: int, pages: str, out: str) -> dict:
     return json.loads(lines[-1])
 
 
+def host_problem() -> str | None:
+    """Why this host cannot show executor scaling, or None if it can: the
+    4-executor leg needs 4 × EXEC_CORES free cores, or the N-executor run
+    wins on contention rather than on executors."""
+    cores = os.cpu_count() or 1
+    need = 4 * EXEC_CORES
+    if need > cores:
+        return (
+            f"the 4-executor leg needs {need} cores (4 x SCAL_CORES="
+            f"{EXEC_CORES}) but this host has {cores}"
+        )
+    load1 = os.getloadavg()[0]
+    if load1 > cores / 2:
+        return (
+            f"1-minute load average {load1:.2f} is above half of the "
+            f"host's {cores} cores"
+        )
+    return None
+
+
 def main() -> None:
+    problem = host_problem()
+    if problem:
+        sys.exit(f"bench_scaling: refusing to run: {problem}")
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 and sys.argv[1].isdigit() else 120_000
     # tmpfs for input + index + shuffle: the VM's virtual disk is far
     # slower than cluster-node NVMe; RAM-backed dirs isolate executor
