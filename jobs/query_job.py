@@ -8,8 +8,9 @@
         --segments <ingest work dir> --queries "prince andrew" [-k 100]
 
 Prints one JSON line per query: {"query": ..., "topk": [[docid, score], ...]}.
-Uses the driver-side Block-Max WAND (exact) — for bulk query sets the
-distributed plan (operators/query.topk_distributed) amortizes better.
+Uses the driver-side exact top-k (``topk_wand``: block-max pruning,
+block-at-a-time) — for bulk query sets the distributed plan
+(operators/query.topk_distributed) amortizes better.
 """
 
 from __future__ import annotations

@@ -11,14 +11,14 @@ idiomatic Spark DataFrame engine:
 - posting lists built by explode → skew-salted repartition by term → groupBy →
   delta-gap + varint compressed blocks with block-max metadata
   (replaces the reference's side-effect KVS writes, IndexerProject.java:54-167)
-- query-time BM25 top-k with block-max WAND pruning
+- query-time exact BM25 top-k with block-at-a-time block-max pruning
   (replaces the reference's sampled tf-idf + boosts, frontend/Master.java:356-601)
 - resumable builds with per-partition checkpoints, lineage and metrics tables.
 
 Everything here derives from public knowledge only: the Apache Spark / PySpark
 API, the published Porter (1980) stemming algorithm, standard IR textbook
 posting-list compression (delta-gap + varint), BM25 (Robertson/Sparck Jones),
-and block-max WAND (Ding & Suel, SIGIR 2011).
+and block-max indexes (Ding & Suel, SIGIR 2011).
 """
 
 __version__ = "0.1.0"

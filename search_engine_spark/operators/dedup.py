@@ -611,7 +611,6 @@ def contamination(
     text: str = "text",
     probe_id: str = "doc_id",
     probe_text: str = "text",
-    broadcast_probes: bool = True,
 ) -> DataFrame:
     """(docid, probe_id, n_shared) — training-data decontamination: for
     every corpus document, the count of DISTINCT token n-grams it shares
@@ -630,10 +629,8 @@ def contamination(
     ps = shingles(probes, probe_id, probe_text, n).select(
         F.col("docid").alias("probe_id"), md5_int(F.col("shingle")).alias("h")
     )
-    if broadcast_probes:
-        ps = F.broadcast(ps)
     return (
-        cs.join(ps, "h")
+        cs.join(F.broadcast(ps), "h")
         .groupBy("docid", "probe_id")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )

@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -432,7 +433,8 @@ def build_index(
 
     Returns the stats dict (also persisted as stats.json). Every stage is a
     DataFrame transform; the only driver-side data are per-partition counts
-    (docid assignment) and the final scalar stats.
+    (docid assignment) and the final scalar stats. The scratch stages under
+    ``out_dir/_stage`` are deleted once the tables commit.
     """
     spark = pages.sparkSession
     parts = partitions or spark.sparkContext.defaultParallelism
@@ -452,11 +454,15 @@ def build_index(
     ).write.mode("overwrite").option("compression", "lz4").parquet(raw_path)
     # table commits go through the Warehouse abstraction: Iceberg snapshot
     # commits when a catalog is configured, identical parquet layout here
-    return assemble_index(
+    stats = assemble_index(
         Warehouse(spark, out_dir, versioned=versioned),
         spark.read.parquet(raw_path), snap_path, offsets, docid_space, parts,
         postings_per_bucket, block_size, stem=stem, cap=cap, lang=lang,
     )
+    # the snapshot (a full copy of the text) and the raw postings are
+    # scratch once the tables commit
+    shutil.rmtree(os.path.join(out_dir, "_stage"))
+    return stats
 
 
 def assemble_index(

@@ -15,15 +15,15 @@ Block-level fast path (why the index stores what it stores):
   re-sort.
 * block_max is stored idf-FREE (max of the tf/dl-normalized BM25 partial);
   df changes under merge, so idf changes — but the stored bound doesn't.
-  The query engine multiplies the merged idf at read time, keeping WAND
-  bounds exact after merge with zero recomputation.
+  The query engine multiplies the merged idf at read time, keeping the
+  block-max bounds exact after merge with zero recomputation.
 * dl/avgdl: document lengths don't change; merged avgdl is the weighted
   mean; per-posting normalized partials are computed against avgdl at
   BUILD time though — so block_max values computed with each side's own
   avgdl are NOT exact bounds under the merged avgdl. We rescale
   conservatively: multiplying a-side maxima by ub_scale(avgdl_a→avgdl_m)
-  keeps them valid upper bounds (see ``_bound_scale``); WAND stays exact
-  (bounds only ever loosen).
+  keeps them valid upper bounds (see ``_bound_scale``); block-max
+  pruning stays exact (bounds only ever loosen).
 * term stats: df/cf add; idf recomputed from merged N. One tiny aggregate.
 
 Ordering: merged per-term block order must be "all of a, then all of b"
@@ -55,7 +55,7 @@ def _bound_scale(avgdl_old: float, avgdl_new: float) -> float:
     D(a) = tf + k1(1−b) + k1·b·dl/a. It equals 1 at dl = 0 and increases
     monotonically in dl toward a_new/a_old, so the supremum is
     c = max(1, avgdl_new / avgdl_old). Scaling stored (idf-free) block
-    maxima by c keeps them valid WAND upper bounds under the merged avgdl —
+    maxima by c keeps them valid block-max bounds under the merged avgdl —
     bounds may loosen, exactness is unaffected."""
     if avgdl_old <= 0:
         return 1.0

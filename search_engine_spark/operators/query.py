@@ -11,11 +11,11 @@ north star replaces that with exact block-max pruning):
   (TakeOrderedAndProject). Scales with the cluster; used for batch query
   workloads (thousands of queries per job).
 
-* ``topk_wand`` — driver-side document-at-a-time Block-Max WAND (Ding &
-  Suel, SIGIR 2011) over the fetched posting blocks for interactive
-  queries: exact top-k with block skipping, never decoding blocks whose
-  block-max cannot beat the current threshold. Verified rank-identical to
-  the exhaustive oracle in tests.
+* ``topk_wand`` — driver-side exact top-k for interactive queries over
+  the fetched posting blocks: block-max pruning (Ding & Suel, SIGIR 2011)
+  applied block-at-a-time with numpy. Blocks decode in descending-bound
+  batches, and no block decodes whose bound cannot beat the current
+  k-th score. Verified rank-identical to the exhaustive oracle in tests.
 
 Phrase search (reference jobs/IndexerProjectPhraseSearch.java:328-475)
 intersects posting lists in df-ascending order and verifies adjacency with
@@ -25,7 +25,6 @@ the stored positions via a two-pointer offset merge.
 from __future__ import annotations
 
 import bisect
-import heapq
 import json
 import os
 from collections.abc import Iterator
@@ -39,7 +38,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from search_engine_spark.catalog import Warehouse
 from search_engine_spark.functions.codec import decode_block_np
-from search_engine_spark.oracle.bm25 import B, K1, bm25_term_score
+from search_engine_spark.oracle.bm25 import B, K1
 from search_engine_spark.oracle.text import STOPWORDS, tokenize
 
 # Final scores round to this many decimals before the (score desc,
@@ -50,11 +49,11 @@ from search_engine_spark.oracle.text import STOPWORDS, tokenize
 # in one plan but not another and flips the emitted ranking. 9 dp is far
 # below any meaningful score difference yet ~10^7 ulps wide, so the
 # tie-break — and therefore the ranking — is identical for every plan and
-# parallelism level. WAND's top-k heap holds ROUNDED scores too (so its
-# k-boundary tie semantics match the declarative paths), which makes its
-# pruning thresholds rounded: every prune test is slackened by
-# SCORE_SLACK so a doc whose rounded score could still tie the rounded
-# theta is never skipped — pruning stays exact under the contract.
+# parallelism level. The driver kernel's threshold theta is a ROUNDED
+# score too (so its k-boundary tie semantics match the declarative
+# paths): its prune test is slackened by SCORE_SLACK so a block holding a
+# doc whose rounded score could still tie theta is never skipped —
+# pruning stays exact under the contract.
 SCORE_ROUND = 9
 SCORE_SLACK = 10.0 ** -SCORE_ROUND
 
@@ -405,160 +404,124 @@ def topk_batch(
 
 
 # ---------------------------------------------------------------------------
-# Driver-side Block-Max WAND
+# Driver-side exact top-k: block-max pruning, array-at-a-time
 # ---------------------------------------------------------------------------
 
-class _Cursor:
-    """Posting cursor over the (bucket, block_id)-ordered blocks of a term.
-
-    Blocks decode lazily; ``next_geq`` moves across block metadata
-    without decoding (the block-max skip)."""
-
-    __slots__ = (
-        "term", "idf", "blocks", "bi", "docids", "tfs", "dls", "pi", "ub",
-    )
-
-    def __init__(self, term: str, idf: float, blocks: list[tuple]):
-        # blocks: list of (first_docid, last_docid, block_max_norm, blob)
-        # where block_max_norm excludes the per-term idf factor (stored
-        # idf-free by the indexer); all bounds here multiply idf back in.
-        self.term = term
-        self.idf = idf
-        self.blocks = blocks
-        self.bi = 0
-        # global upper bound = idf · max block_max (standard WAND term UB)
-        self.ub = idf * max(b[2] for b in blocks) if blocks else 0.0
-        self._load()
-
-    _EMPTY = np.empty(0, dtype=np.int64)
-
-    def _load(self) -> None:
-        self.pi = 0
-        if self.bi < len(self.blocks):
-            d, t, dl = decode_block_np(self.blocks[self.bi][3])
-            self.docids, self.tfs, self.dls = d, t, dl
-        else:
-            self.docids = self.tfs = self.dls = self._EMPTY
-
-    @property
-    def exhausted(self) -> bool:
-        return self.bi >= len(self.blocks)
-
-    @property
-    def doc(self) -> int:
-        return int(self.docids[self.pi])
-
-    @property
-    def tf(self) -> int:
-        return int(self.tfs[self.pi])
-
-    @property
-    def dl(self) -> int:
-        return int(self.dls[self.pi])
-
-    @property
-    def block_max(self) -> float:
-        return self.idf * self.blocks[self.bi][2]
-
-    @property
-    def block_last(self) -> int:
-        return self.blocks[self.bi][1]
-
-    def next_geq(self, target: int) -> None:
-        """Advance to the first posting with docid >= target. Skipped
-        blocks are passed over on METADATA alone — only the landing block
-        decodes (the whole point of block-max skipping; decoding each
-        intermediate block made a long skip cost O(skipped) decodes)."""
-        moved = False
-        while not self.exhausted and self.blocks[self.bi][1] < target:
-            self.bi += 1
-            moved = True
-        if self.exhausted:
-            self.docids = self.tfs = self.dls = self._EMPTY
-            return
-        if moved or not len(self.docids):
-            self._load()
-        # binary search within the decoded block (never moves backwards:
-        # postings before pi are already consumed)
-        self.pi = max(
-            self.pi, int(np.searchsorted(self.docids, target, side="left"))
-        )
-        if self.pi >= len(self.docids):
-            # current block fully consumed; move on without decoding — the
-            # recursion's metadata loop picks the landing block
-            self.bi += 1
-            self.docids = self.tfs = self.dls = self._EMPTY
-            if self.exhausted:
-                return
-            self.next_geq(target)
-
-    def advance(self) -> None:
-        self.pi += 1
-        if self.pi >= len(self.docids):
-            self.bi += 1
-            self._load()
-
-
 def _fetch_term_blocks(index: Index, terms: list[str]) -> dict[str, list[tuple]]:
-    """Collect (bucket, block_id)-ordered block metadata + bytes per term.
-    One partition-pruned scan for all query terms."""
+    """Per query term, in query order: its blocks as (first_docid,
+    last_docid, block_max, bytes), (bucket, block_id)-ordered. One
+    partition-pruned scan for all query terms."""
     rows = (
         index.postings.filter(F.col("term").isin(terms))
         .select(
             "term", "bucket", "block_id", "first_docid", "last_docid",
-            "block_max", "block", "n",
+            "block_max", "block",
         )
         .collect()
     )
-    out: dict[str, list[tuple]] = {}
+    out: dict[str, list[tuple]] = {t: [] for t in terms}
     for r in sorted(rows, key=lambda r: (r["bucket"], r["block_id"])):
-        out.setdefault(r["term"], []).append(
+        out[r["term"]].append(
             (r["first_docid"], r["last_docid"], r["block_max"],
-             bytes(r["block"]), r["n"])
+             bytes(r["block"]))
         )
-    return out
+    return {t: blks for t, blks in out.items() if blks}
 
 
-def _topk_bulk(
-    blocks: dict[str, list[tuple]],
-    idfs: dict[str, float],
-    avgdl: float,
+def _block_bounds(
+    first: np.ndarray, last: np.ndarray, ub: np.ndarray
+) -> np.ndarray:
+    """The tightest score bound the block metadata gives each block.
+
+    The docid axis is cut at every block's first and last + 1, so each
+    piece lies inside one block of a term or in a gap. A piece's bound is
+    the sum over terms of the covering block's ``ub`` (idf x block_max);
+    a block's bound is the max over its pieces."""
+    cuts = np.unique(np.concatenate((first, last + 1)))
+    lo = np.searchsorted(cuts, first)
+    hi = np.searchsorted(cuts, last + 1)  # < len(cuts): last + 1 is a cut
+    span = hi - lo
+    # the pieces [lo, hi) of every block, flattened; a term's blocks are
+    # docid-disjoint, so a piece gets at most one ub per term
+    pieces = np.arange(span.sum()) + np.repeat(
+        lo + span - np.cumsum(span), span
+    )
+    piece_ub = np.bincount(
+        pieces, weights=np.repeat(ub, span), minlength=len(cuts)
+    )
+    # max over each [lo, hi); the entries reduced from each hi are dropped
+    edges = np.column_stack((lo, hi)).ravel()
+    return np.maximum.reduceat(piece_ub, edges)[::2]
+
+
+def _topk_blocks(
+    blocks: dict[str, list[tuple]], idfs: dict[str, float], avgdl: float,
     k: int,
 ) -> list[tuple[int, float]]:
-    """Vectorized exhaustive scoring of the fetched blocks (numpy): decode
-    every block, compute BM25 partials array-at-a-time, sum per docid via
-    sorted reduceat, partial-select top-k. Exact — same result as WAND —
-    and ~100× faster than the Python DAAT loop when pruning cannot help."""
-    d_l, p_l = [], []
-    for t, blks in blocks.items():
-        idf = idfs[t]
-        for _f, _l, _m, blob, _n in blks:
-            d, tf, dl = decode_block_np(blob)
-            if not len(d):
-                continue
+    """Exact BM25 top-k over the fetched blocks with block-max pruning,
+    array-at-a-time: [(docid, score)] sorted (score desc, docid asc).
+
+    Blocks decode in descending :func:`_block_bounds` order, in batches
+    that grow 4x. After each batch, theta is the k-th best rounded partial
+    sum so far. BM25 partials are >= 0, so partial sums are lower bounds
+    and theta is at most the k-th score. Decoding stops at the first block
+    whose bound is <= theta - SCORE_SLACK: no doc in it or in any later
+    block can reach the top k, so every doc that does has all its partials
+    decoded. Each doc's partials are summed in query-term order with one
+    sorted reduceat, whatever order the blocks decoded in."""
+    metas = [
+        (ti, f, l, idfs[t] * m, blob)
+        for ti, (t, blks) in enumerate(blocks.items())
+        for f, l, m, blob in blks
+    ]
+    if not metas:
+        return []
+    term, first, last, ub, blobs = zip(*metas)
+    idf = [idfs[t] for t in blocks]
+    bound = _block_bounds(
+        np.array(first, dtype=np.int64), np.array(last, dtype=np.int64),
+        np.array(ub, dtype=np.float64),
+    )
+    order = np.argsort(-bound, kind="stable")
+    neg_bound = -bound[order]  # ascending
+    keys, parts = [], []
+    theta = -np.inf
+    done, batch = 0, 16
+    while True:
+        # blocks with bound > theta - SCORE_SLACK form a prefix of ``order``
+        end = min(done + batch,
+                  int(np.searchsorted(neg_bound, SCORE_SLACK - theta)))
+        if end <= done:
+            break
+        for b in order[done:end]:
+            d, tf, dl = decode_block_np(blobs[b])
             tf = tf.astype(np.float64)
-            part = (
-                idf * tf * (K1 + 1.0)
+            # sort key: docid, then query-term position
+            keys.append(d * len(idf) + term[b])
+            parts.append(
+                idf[term[b]] * tf * (K1 + 1.0)
                 / (tf + K1 * (1.0 - B + B * dl.astype(np.float64) / avgdl))
             )
-            d_l.append(d)
-            p_l.append(part)
-    if not d_l:
-        return []
-    docids = np.concatenate(d_l)
-    parts = np.concatenate(p_l)
-    order = np.argsort(docids, kind="stable")  # stable: per-doc term order
-    d_s, p_s = docids[order], parts[order]
-    starts = np.nonzero(np.concatenate(([True], d_s[1:] != d_s[:-1])))[0]
-    uniq = d_s[starts]
-    sums = np.round(np.add.reduceat(p_s, starts), SCORE_ROUND)
-    top = np.lexsort((uniq, -sums))[:k]
+        done, batch = end, batch * 4
+        key = np.concatenate(keys)
+        at = np.argsort(key)
+        d_s = key[at] // len(idf)
+        starts = np.flatnonzero(np.diff(d_s, prepend=-1))
+        uniq = d_s[starts]
+        sums = np.round(
+            np.add.reduceat(np.concatenate(parts)[at], starts), SCORE_ROUND
+        )
+        if len(sums) >= k:
+            theta = np.partition(sums, len(sums) - k)[len(sums) - k]
+    top = np.flatnonzero(sums >= theta)
+    top = top[np.lexsort((uniq[top], -sums[top]))][:k]
     return [(int(uniq[i]), float(sums[i])) for i in top]
 
 
-# When the query's posting lists cover more than this fraction of the
-# corpus (per term on average), block-max pruning cannot skip anything
-# useful and the vectorized exhaustive path wins by orders of magnitude.
+# Engine code no longer reads this constant: the driver top-k has one
+# path. It only defines perfbench's broad/selective query split (mean
+# query-term df >= this fraction of n_docs) behind its
+# ``query.topk.bulk_share`` metric.
 BULK_SCORE_DF_FRACTION = 0.10
 
 # Driver-side serving paths (``topk_wand``, ``phrase_docs``) collect
@@ -574,16 +537,10 @@ DRIVER_POSTINGS_MAX = 2_000_000
 def topk_wand(
     index: Index, query: str, k: int = 100
 ) -> list[tuple[int, float]]:
-    """Exact BM25 top-k, driver-side (the interactive path).
-
-    Picks between two EXACT executions over the same partition-pruned
-    block fetch: document-at-a-time Block-Max WAND (Ding & Suel 2011) when
-    the query terms are selective enough for block skipping to pay, and
-    vectorized exhaustive scoring (``_topk_bulk``) when the posting lists
-    cover at least :data:`BULK_SCORE_DF_FRACTION` of the corpus per term
-    — there a Python posting-at-a-time loop is pure overhead because no
-    block can be skipped. Both return [(docid, score)] sorted
-    (score desc, docid asc), identical to the exhaustive oracle.
+    """Exact BM25 top-k, driver-side (the interactive path): one
+    partition-pruned fetch of the query terms' blocks, scored by
+    :func:`_topk_blocks`. Returns [(docid, score)] sorted (score desc,
+    docid asc), identical to the exhaustive oracle.
 
     Document lengths come from the posting blocks themselves (codec v3),
     so the query path touches ONLY the pruned postings + terms for the
@@ -599,7 +556,6 @@ def topk_wand(
     terms = parse_query(query, stem=index.stats.get("stem", True))
     if not terms or k == 0:
         return []
-    avgdl = index.stats["avgdl"]
     trows = (
         index.terms.filter(F.col("term").isin(terms))
         .select("term", "idf", "df")
@@ -610,114 +566,7 @@ def topk_wand(
         rows = topk_distributed(index, query, k).collect()
         return [(int(r["docid"]), float(r["score"])) for r in rows]
     blocks = _fetch_term_blocks(index, [t for t in terms if t in idfs])
-    n_docs = max(1, index.stats["n_docs"])
-    total_postings = sum(sum(b[4] for b in blks) for blks in blocks.values())
-    if total_postings / max(1, len(blocks)) >= BULK_SCORE_DF_FRACTION * n_docs:
-        return _topk_bulk(blocks, idfs, avgdl, k)
-    cursors = [
-        _Cursor(t, idfs[t], blocks[t]) for t in terms if blocks.get(t)
-    ]
-    cursors = [c for c in cursors if not c.exhausted]
-    if not cursors:
-        return []
-
-    heap: list[tuple[float, int]] = []  # min-heap of (score, -docid)
-    theta = 0.0
-
-    def push(docid: int, score: float) -> None:
-        nonlocal theta
-        item = (score, -docid)
-        if len(heap) < k:
-            heapq.heappush(heap, item)
-            if len(heap) == k:
-                theta = heap[0][0]
-        elif item > heap[0]:
-            heapq.heapreplace(heap, item)
-            theta = heap[0][0]
-
-    while True:
-        live = [c for c in cursors if not c.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda c: c.doc)
-        # pivot: smallest prefix of (doc-sorted) cursors whose UB sum can
-        # beat theta. Docs strictly below pivot_doc cannot enter the top-k,
-        # so cursors may be advanced past them (classic WAND invariant).
-        acc = 0.0
-        pivot_i = -1
-        for i, c in enumerate(live):
-            acc += c.ub
-            if len(heap) < k or acc > theta - SCORE_SLACK:
-                pivot_i = i
-                break
-        if pivot_i < 0:
-            break  # no remaining document can beat theta
-        pivot_doc = live[pivot_i].doc
-
-        if len(heap) >= k:
-            # Block-max refinement (BMW): shallow-align the blocks of every
-            # cursor at doc <= pivot_doc (skipped postings all have
-            # docid < pivot_doc — already excluded by the WAND invariant),
-            # then test the block-max sum against theta.
-            group = [c for c in live if c.doc <= pivot_doc]
-            for c in group:
-                # metadata-only shallow advance; decode once on landing
-                moved = False
-                while not c.exhausted and c.block_last < pivot_doc:
-                    c.bi += 1
-                    moved = True
-                if moved:
-                    c._load()
-            group = [c for c in group if not c.exhausted]
-            if not group:
-                continue
-            bm_sum = sum(c.block_max for c in group)
-            if bm_sum <= theta - SCORE_SLACK:
-                # No doc in [pivot_doc, boundary] scored from the group's
-                # current blocks can beat theta; jump past the smallest
-                # block boundary, clamped at the next non-group cursor's doc
-                # so no doc with cross-cursor contributions is skipped.
-                boundary = min(c.block_last for c in group)
-                target = boundary + 1
-                nxt = min(
-                    (c.doc for c in live
-                     if not c.exhausted and c.doc > pivot_doc),
-                    default=None,
-                )
-                if nxt is not None:
-                    target = min(target, nxt)
-                target = max(target, pivot_doc + 1)
-                for c in group:
-                    if not c.exhausted and c.doc < target:
-                        c.next_geq(target)
-                continue
-
-        # deep alignment: move every cursor below the pivot up to it
-        # (safe per the WAND invariant; no-op when the heap isn't full,
-        # because then pivot_i == 0 == the smallest doc).
-        advanced = False
-        for c in live:
-            if not c.exhausted and c.doc < pivot_doc:
-                c.next_geq(pivot_doc)
-                advanced = True
-        if advanced:
-            continue  # re-sort and re-pivot with fresh positions
-
-        # all live cursors sit at doc >= pivot_doc → fully score pivot_doc
-        s = 0.0
-        for c in live:
-            if not c.exhausted and c.doc == pivot_doc:
-                s += bm25_term_score(c.tf, c.dl, avgdl, c.idf)
-                c.advance()
-        # the heap holds the EMITTED (rounded) score: at the k boundary the
-        # raw comparison could keep a doc the rounded (score desc, docid
-        # asc) contract would drop
-        push(pivot_doc, round(s, SCORE_ROUND))
-
-    return sorted(
-        ((-d, round(s, SCORE_ROUND)) for s, d in heap),
-        key=lambda x: (-x[1], x[0]),
-    )
+    return _topk_blocks(blocks, idfs, index.stats["avgdl"], k)
 
 
 # ---------------------------------------------------------------------------

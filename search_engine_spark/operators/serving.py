@@ -20,7 +20,7 @@ are the query-aware upgrades a production serving tier needs:
 
 All three are re-ranking layers over an already-pruned candidate pool
 (top-N from the index), so at 100 TB their input is O(pool), not O(corpus):
-the expensive part stays in the WAND/index tier, and these run as a
+the expensive part stays in the top-k/index tier, and these run as a
 broadcast-sized tail on the driver-adjacent stage. No Python UDFs.
 """
 

@@ -645,7 +645,6 @@ def lm_score(
     docid: str = "doc_id",
     text: str = "text",
     lm: DataFrame | None = None,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """(docid, n_tokens, nats_micro, avg_nats) — per-document unigram
     cross-entropy, the perplexity-filter signal of the CCNet/CC-Net-family
@@ -662,15 +661,11 @@ def lm_score(
     integers).
 
     Scale: one explode + one keyed agg per pass; the vocab table is
-    broadcast (Zipf keeps real vocabularies in the 10^6-10^8 range — set
-    ``broadcast_vocab=False`` past executor-memory scale for a shuffle
-    hash join on ``term``). Docs with zero tokens carry no signal and are
-    excluded."""
+    broadcast (Zipf keeps real vocabularies in the 10^6-10^8 range). Docs
+    with zero tokens carry no signal and are excluded."""
     if lm is None:
         lm = lm_logprob_table(df, docid, text)
-    lm = lm.select("term", "lp_micro")
-    if broadcast_vocab:
-        lm = F.broadcast(lm)
+    lm = F.broadcast(lm.select("term", "lp_micro"))
     flat = df.select(
         F.col(docid).alias("docid"),
         F.explode(tokens_col(text)).alias("term"),
@@ -973,7 +968,6 @@ def lm_score_bigram(
     df: DataFrame,
     docid: str = "doc_id",
     text: str = "text",
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """(docid, n_tokens, nats_micro, avg_nats) — per-document bigram
     stupid-backoff cross-entropy (Brants et al. 2007), the
@@ -988,12 +982,11 @@ def lm_score_bigram(
     only floats are the per-DISTINCT-term/bigram quantizations.
 
     Shape: one docid-keyed window (lag) for the previous token, one
-    broadcast join on the unigram vocab (``broadcast_vocab=False`` for a
-    shuffle join past executor memory), one shuffle join on the bigram
+    broadcast join on the unigram vocab, one shuffle join on the bigram
     key, one docid-keyed agg."""
-    uni = lm_logprob_table(df, docid, text).select("term", "lp_micro")
-    if broadcast_vocab:
-        uni = F.broadcast(uni)
+    uni = F.broadcast(
+        lm_logprob_table(df, docid, text).select("term", "lp_micro")
+    )
     bg = lm_bigram_table(df, docid, text).select(
         F.col("term1").alias("prev"),
         F.col("term2").alias("term"),

@@ -1,5 +1,5 @@
 """Hypothesis fuzz of the FULL index pipeline: random small corpora →
-distributed build → distributed + WAND top-k, compared rank- and
+distributed build → distributed + driver top-k, compared rank- and
 score-identically against the exhaustive Python oracle. The fixed-corpus
 suite (test_index_query.py) pins one realistic corpus; this walks the
 degenerate corners — empty/punctuation-only docs, single-token docs,

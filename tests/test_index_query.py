@@ -3,7 +3,7 @@
 Builds the block index over the deterministic synthetic corpus and requires:
 - identical doc stats (n_docs, dl per doc, avgdl)
 - rank-identical BM25 top-k (docids) with scores equal to 1e-9, for BOTH
-  the distributed Spark plan and the driver-side Block-Max WAND
+  the distributed Spark plan and the driver-side block-max top-k
 - identical phrase-search doc sets
 - skew-bucketing invariance: tiny bucket size (forces heavy-term splits)
   produces identical results to the unbucketed build
@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import itertools
 import math
+import os
 
 import pytest
 
@@ -59,6 +60,12 @@ def index(spark, tmp_path_factory, corpus):
     return Q.load_index(spark, out)
 
 
+def test_build_index_removes_its_scratch(index):
+    """The url-range snapshot (a full copy of the text) and the raw
+    postings under _stage/ are gone once the tables commit."""
+    assert not os.path.exists(os.path.join(index.path, "_stage"))
+
+
 def test_doc_stats_match_oracle(index, oracle):
     assert index.stats["n_docs"] == oracle.n_docs
     assert abs(index.stats["avgdl"] - oracle.avgdl) < 1e-9
@@ -95,19 +102,6 @@ def test_topk_wand_matches_oracle(index, oracle, q):
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
         assert gs == pytest.approx(ws, abs=1e-9)
-
-
-@pytest.mark.parametrize("q", QUERIES)
-def test_topk_strategies_identical(index, oracle, q, monkeypatch):
-    """Forced DAAT-WAND and forced vectorized-bulk must return identical
-    (docid, score) lists — topk_wand only ever picks between these two."""
-    monkeypatch.setattr(Q, "BULK_SCORE_DF_FRACTION", float("inf"))
-    wand = Q.topk_wand(index, q, k=40)
-    monkeypatch.setattr(Q, "BULK_SCORE_DF_FRACTION", 0.0)
-    bulk = Q.topk_wand(index, q, k=40)
-    assert [d for d, _ in wand] == [d for d, _ in bulk]
-    for (_, a), (_, b) in zip(wand, bulk):
-        assert a == pytest.approx(b, abs=1e-9)
 
 
 def test_topk_batch_matches_oracle(index, oracle):
@@ -440,12 +434,18 @@ def test_docids_survive_split_snapshot_files(
     from search_engine_spark.operators import indexer
 
     split_key = "spark.sql.files.maxPartitionBytes"
-    seen = []
+    seen, layout = [], []
     real_assemble = indexer.assemble_index
 
-    def spy(*a, **kw):
+    def spy(wh, postings, snap_path, *a, **kw):
+        # read the snapshot here: build_index deletes it after assembly
         seen.append(spark.conf.get(split_key))
-        return real_assemble(*a, **kw)
+        snap = spark.read.parquet(snap_path)
+        files = snap.inputFiles()
+        n_groups = sum(pq.ParquetFile(f[len("file:"):]).num_row_groups
+                       for f in files)
+        layout.append((len(files), n_groups, snap.rdd.getNumPartitions()))
+        return real_assemble(wh, postings, snap_path, *a, **kw)
 
     monkeypatch.setattr(indexer, "assemble_index", spy)
     out = str(tmp_path_factory.mktemp("split") / "main")
@@ -460,9 +460,6 @@ def test_docids_survive_split_snapshot_files(
         stats = build_index(gen_pages_df(spark, N_DOCS, partitions=4), out,
                             lang="en", stem=True, partitions=4)
         after = spark.conf.get(split_key)
-        snap = spark.read.parquet(f"{out}/_stage/ranged_snapshot")
-        files = snap.inputFiles()
-        n_splits = snap.rdd.getNumPartitions()
     finally:
         for key, value in saved.items():
             if value is None:
@@ -470,9 +467,8 @@ def test_docids_survive_split_snapshot_files(
             else:
                 spark.conf.set(key, value)
     assert seen == ["32k"] and after == "32k"
-    n_groups = sum(pq.ParquetFile(f[len("file:"):]).num_row_groups
-                   for f in files)
-    assert n_groups > len(files) and n_splits > len(files)
+    [(n_files, n_groups, n_splits)] = layout
+    assert n_groups > n_files and n_splits > n_files
     en_urls = sorted(
         r["url"] for r in map(page_record, range(N_DOCS)) if r["lang"] == "en"
     )
